@@ -109,7 +109,7 @@ def _mh_band_cands(s: SparkSession, d: str) -> DataFrame:
     self-join per attempt instead of one per consumer query."""
     def build() -> DataFrame:
         sigs = _sigsets(s, d).select("id", "minhash")
-        return minhash_lsh.minhash_candidates(
+        return simhash_lsh.band_candidates(
             minhash_lsh.minhash_bands(sigs, CFG))
     return _memo(s, d, "mh_band_cands", build)
 
@@ -268,7 +268,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # one tokenize+md5 pass shared with the jaccard/est derived views
     def _mh_pairs(s: SparkSession, d: str) -> DataFrame:
         ss = _sigsets(s, d)
-        return minhash_lsh.minhash_pairs(
+        return minhash_lsh.minhash_edges(
             _docs(s, d), cfg=CFG, threshold=CFG.jaccard_threshold,
             sigs=ss.select("id", "minhash"),
             sets=ss.select("id", "shingles"),
@@ -282,7 +282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # path without perturbing the timed headline query above
     def _mh_pairs_collapsed(s: SparkSession, d: str) -> DataFrame:
         ss = _sigsets(s, d)
-        return minhash_lsh.minhash_pairs(
+        return minhash_lsh.minhash_edges(
             _docs(s, d), cfg=CFG, threshold=CFG.jaccard_threshold,
             sigs=ss.select("id", "minhash"),
             sets=ss.select("id", "shingles"),

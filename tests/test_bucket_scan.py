@@ -1,45 +1,30 @@
-"""Salted hot-bucket candidate generation must be EXACTLY lossless."""
+"""The sorted-bucket scan kernels must be EXACTLY equal to their join-shaped
+twins, across Arrow-batch boundaries and inside oversized buckets."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from contextlib import contextmanager
 
 from webdedup.config import DEFAULT as CFG
 from webdedup.operators import simhash_lsh
 
-
-def _pairs(df):
-    return {(r["a"], r["b"]) for r in df.collect()}
+_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def test_salted_equals_unsalted_with_hot_bucket(spark):
-    # one giant bucket (60 ids in table 0 / key 7), several cold buckets
-    rows = [(i, 0, 7) for i in range(60)]
-    rows += [(100 + i, 1, i % 5) for i in range(20)]
-    bands = spark.createDataFrame(rows, ["id", "table_id", "band_key"])
-    exact = _pairs(simhash_lsh.band_candidates(bands))
-    for hot_threshold in (5, 30, 1000):
-        salted = _pairs(simhash_lsh.salted_band_candidates(
-            bands, hot_threshold, salt_factor=4))
-        assert salted == exact, f"hot_threshold={hot_threshold}"
-
-
-def test_simhash_edges_salt_mode_components(docs, corpus_texts):
-    """salt-mode edges yield the same components as brute-force simhash."""
-    from webdedup import oracle
-    e_salt, overflow = simhash_lsh.simhash_edges(
-        docs, cfg=CFG, scheme="combo", skew_mode="salt")
-    assert overflow.count() == 0
-    clone_plus_rep = {(r["a"], r["b"]) for r in e_salt.collect()}
-    exp = oracle.simhash_pairs(corpus_texts, CFG)
-    ids = sorted(corpus_texts)
-    got_comp = oracle.union_find_clusters(ids, clone_plus_rep)
-    exp_comp = oracle.union_find_clusters(ids, exp)
-    assert got_comp == exp_comp
+@contextmanager
+def _tiny_arrow_batches(spark):
+    """16-row Arrow batches force a bucket to straddle batch boundaries, so
+    the scan's carry-over buffer is exercised."""
+    old = spark.conf.get(_BATCH)
+    spark.conf.set(_BATCH, "16")
+    try:
+        yield
+    finally:
+        spark.conf.set(_BATCH, old)
 
 
 def test_blocked_verify_equals_join_verify(spark):
-    """blocked_hamming_pairs (the r6 1M-cliff fix, simhash_edges default)
+    """blocked_hamming_pairs (the r6 1M-cliff fix, simhash_edges' verify)
     must be BIT-IDENTICAL to the join-shaped verify — including hot
     buckets larger than the numpy chunk sizes (forces the row/col chunk
     paths and the Arrow-batch carry-over), cross-table dedup, and both
@@ -70,15 +55,10 @@ def test_blocked_verify_equals_join_verify(spark):
     exp = canon(simhash_lsh.hamming_verify(
         simhash_lsh.band_candidates(bands),
         bands.select("id", "simhash").distinct(), CFG.hamming_threshold))
-    # tiny chunks force multi-chunk row/col iteration inside one bucket;
-    # tiny Arrow batches force the bucket carry-over across batch bounds
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-    try:
+    # tiny chunks force multi-chunk row/col iteration inside one bucket
+    with _tiny_arrow_batches(spark):
         got = canon(simhash_lsh.blocked_hamming_pairs(
             bands, CFG.hamming_threshold, chunk_rows=7, chunk_cols=13))
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       "10000")
     assert got == exp and len(exp) > 0
     # string ids: canonicalization must match Spark's least/greatest
     srows = [(f"d{i:03d}", s, t, k) for (i, s, t, k) in rows]
@@ -92,11 +72,39 @@ def test_blocked_verify_equals_join_verify(spark):
     assert got_s == exp_s and len(exp_s) > 0
 
 
+def test_lsh_cosine_blocked_equals_fold_across_batches(spark):
+    """The GEMM scorer behind the same scan: with 16-row Arrow batches the
+    multi-row buckets of clustered embeddings straddle batch boundaries,
+    and the carried-over buckets must still yield exactly the
+    candidate-join fold's pairs and rounded cosines."""
+    import numpy as np
+
+    from webdedup.operators import similarity
+
+    # 20 tight clusters of 20 vectors: members share most band keys, so
+    # buckets hold many rows
+    rng = np.random.default_rng(11)
+    centers = rng.standard_normal((20, CFG.embedding_dim))
+    vecs = (np.repeat(centers, 20, axis=0)
+            + 0.3 * rng.standard_normal((400, CFG.embedding_dim)))
+    emb = spark.createDataFrame(
+        [(i, v.astype(np.float32).tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>")
+    fold = {(r["a"], r["b"]): r["cosine"] for r in
+            similarity.lsh_cosine_pairs(
+                emb, threshold=0.3, cfg=CFG, verify="fold").collect()}
+    with _tiny_arrow_batches(spark):
+        blocked = {(r["a"], r["b"]): r["cosine"] for r in
+                   similarity.lsh_cosine_pairs(
+                       emb, threshold=0.3, cfg=CFG,
+                       verify="blocked").collect()}
+    assert blocked == fold and len(fold) > 0
+
+
 def test_simhash_edges_blocked_default_components(docs, corpus_texts):
-    """the blocked default yields the same components as brute force."""
+    """simhash_edges yields the same components as brute force."""
     from webdedup import oracle
-    e, overflow = simhash_lsh.simhash_edges(docs, cfg=CFG, scheme="combo")
-    assert overflow.count() == 0
+    e = simhash_lsh.simhash_edges(docs, cfg=CFG, scheme="combo")
     got = {(r["a"], r["b"]) for r in e.collect()}
     ids = sorted(corpus_texts)
     exp = oracle.simhash_pairs(corpus_texts, CFG)

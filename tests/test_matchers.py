@@ -45,7 +45,7 @@ def test_jaccard_all_pairs_equals_bruteforce(docs, corpus_texts):
 
 
 def test_minhash_banding_recall(docs, corpus_texts):
-    got = _pairset(minhash_lsh.minhash_pairs(
+    got = _pairset(minhash_lsh.minhash_edges(
         docs, cfg=CFG, threshold=CFG.jaccard_threshold))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert got <= exp, "verify step must keep only true >=threshold pairs"
@@ -180,7 +180,7 @@ def test_minhash_est_prefilter_keeps_recall(docs, corpus_texts):
     """Signature-estimate prefilter (minhash_search.py:81-83) 3σ under the
     verify threshold must not change what survives the exact verify where
     banding is reliable (J>=0.7)."""
-    got = _pairset(minhash_lsh.minhash_pairs(
+    got = _pairset(minhash_lsh.minhash_edges(
         docs, cfg=CFG, threshold=CFG.jaccard_threshold, est_prefilter=0.35))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert got <= exp
@@ -192,10 +192,9 @@ def test_minhash_est_prefilter_keeps_recall(docs, corpus_texts):
 def test_minhash_fast_accept_stratification(docs, corpus_texts):
     """fast_accept must only ADD pairs (est >= cutoff, skipping the exact
     verify) relative to the exact-verify edge set — never lose one."""
-    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, skew_mode="salt",
-              est_prefilter=0.37)
-    base, _ = minhash_lsh.minhash_edges(docs, **kw)
-    fast, _ = minhash_lsh.minhash_edges(docs, fast_accept=0.633, **kw)
+    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, est_prefilter=0.37)
+    base = minhash_lsh.minhash_edges(docs, **kw)
+    fast = minhash_lsh.minhash_edges(docs, fast_accept=0.633, **kw)
     # exact mode has no flag column; fast-accept mode marks every row so
     # consumers can tell estimate-valued scores from exact ones (ADVICE r3)
     assert "estimated" not in base.columns
@@ -260,7 +259,7 @@ def test_jaccard_verify_restrict_sets_equivalence(spark):
     sets = jaccard.shingle_sets(docs, "doc_id", "text", CFG).localCheckpoint()
     bands = minhash_lsh.minhash_bands(
         minhash_lsh.minhash_signatures(docs, cfg=CFG).localCheckpoint(), CFG)
-    cands = minhash_lsh.minhash_candidates(bands)
+    cands = simhash_lsh.band_candidates(bands)
     base = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
         cands, None, cfg=CFG, threshold=0.2, sets=sets).collect()}
     restricted = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
@@ -278,17 +277,17 @@ def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
     def rowset(frame):
         return {tuple(r) for r in frame.collect()}
 
-    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, skew_mode="salt")
-    base, _ = minhash_lsh.minhash_edges(docs, **kw)
-    coll, _ = minhash_lsh.minhash_edges(docs, collapse_identical=True, **kw)
+    kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold)
+    base = minhash_lsh.minhash_edges(docs, **kw)
+    coll = minhash_lsh.minhash_edges(docs, collapse_identical=True, **kw)
     assert base.columns == coll.columns
     b, c = rowset(base), rowset(coll)
     assert b == c, (len(b), len(c), list(b - c)[:3], list(c - b)[:3])
     assert b, "fixture must produce pairs (vacuous otherwise)"
 
     fkw = dict(est_prefilter=0.37, fast_accept=0.633, **kw)
-    fbase, _ = minhash_lsh.minhash_edges(docs, **fkw)
-    fcoll, _ = minhash_lsh.minhash_edges(docs, collapse_identical=True, **fkw)
+    fbase = minhash_lsh.minhash_edges(docs, **fkw)
+    fcoll = minhash_lsh.minhash_edges(docs, collapse_identical=True, **fkw)
     assert fbase.columns == fcoll.columns  # incl. the estimated flag
     fb, fc = rowset(fbase), rowset(fcoll)
     assert fb == fc, (len(fb), len(fc), list(fb - fc)[:3], list(fc - fb)[:3])
@@ -328,7 +327,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
     # pipeline semantics: the dial filters the STAR-COLLAPSED edge list
     # (simhash_edges), so each surviving edge is individually confirmed;
     # an identical-fingerprint class re-splits by overlap with its rep
-    e, _ = simhash_lsh.simhash_edges(
+    e = simhash_lsh.simhash_edges(
         None, cfg=CFG, sigs=sigs.select("id", "simhash"))
     conf_edges = _pairset(jaccard_verify(
         e.select("a", "b"), None, cfg=CFG, threshold=0.3,
@@ -347,7 +346,7 @@ def test_simhash_confirm_est_mode_agreement(docs, corpus_texts):
     from webdedup.functions.signatures import all_signatures
 
     sigs = all_signatures(docs, cfg=CFG).localCheckpoint()
-    e, _ = simhash_lsh.simhash_edges(
+    e = simhash_lsh.simhash_edges(
         None, cfg=CFG, sigs=sigs.select("id", "simhash"))
     edge_set = _pairset(e)
     conf, margin = 0.3, 0.15
@@ -385,11 +384,9 @@ def test_minhash_empty_docs_never_pair(spark):
 
     for kw in (dict(),  # exact-verify mode
                dict(est_prefilter=0.2, fast_accept=0.6)):  # production mode
-        base, _ = minhash_lsh.minhash_edges(
-            docs, cfg=CFG, threshold=0.3, skew_mode="salt", **kw)
-        coll, _ = minhash_lsh.minhash_edges(
-            docs, cfg=CFG, threshold=0.3, skew_mode="salt",
-            collapse_identical=True, **kw)
+        base = minhash_lsh.minhash_edges(docs, cfg=CFG, threshold=0.3, **kw)
+        coll = minhash_lsh.minhash_edges(
+            docs, cfg=CFG, threshold=0.3, collapse_identical=True, **kw)
         b, c = rowset(base), rowset(coll)
         assert b == c, (kw, b ^ c)
         ids = {x for r in b for x in (r[0], r[1])}
@@ -418,13 +415,13 @@ def test_minhash_precomputed_cands_identical(spark):
     fused = minhash_shingle_sets(docs, CFG).localCheckpoint()
     sigs = fused.select("id", "minhash")
     sets = fused.select("id", "shingles")
-    cands = minhash_lsh.minhash_candidates(
+    cands = simhash_lsh.band_candidates(
         minhash_lsh.minhash_bands(sigs, CFG))
     # raw frame must actually contain sentinel pairs for the test to bite
     assert ("e1", "e2") in _pairset(cands)
-    base = minhash_lsh.minhash_pairs(
+    base = minhash_lsh.minhash_edges(
         docs, cfg=CFG, threshold=0.3, sigs=sigs, sets=sets)
-    pre = minhash_lsh.minhash_pairs(
+    pre = minhash_lsh.minhash_edges(
         docs, cfg=CFG, threshold=0.3, sigs=sigs, sets=sets, cands=cands)
     assert {tuple(r) for r in base.collect()} == \
            {tuple(r) for r in pre.collect()}

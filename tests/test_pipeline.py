@@ -96,8 +96,7 @@ def test_resume_after_mid_stage_kill(pages):
             for df in (r1.assignments, r1.representatives, r1.cluster_sizes))
         # simulate the kill: everything after `signatures` is gone...
         for name in ("edges_exact", "edges_simhash", "edges_minhash",
-                     "edges_substring", "simhash_bucket_overflow",
-                     "minhash_bucket_overflow", "assignments",
+                     "edges_substring", "assignments",
                      "representatives", "cluster_sizes"):
             shutil.rmtree(checkpoint.table_path(d, name), ignore_errors=True)
         # ...and edges_minhash died mid-write: data files but NO _SUCCESS
@@ -193,15 +192,6 @@ def test_stage_metrics_record_memory(spark, work_dir, result):
     bad = m.filter((F.col("peak_rss_mb") <= 0) | (F.col("jvm_heap_mb") <= 0))
     assert bad.count() == 0
     assert m.count() > 0
-
-
-def test_minhash_overflow_table_written(spark, work_dir, result):
-    """No silent caps: the minhash stage persists its quarantine table
-    (empty under lossless salting, but always present/auditable)."""
-    assert checkpoint.exists(work_dir, "minhash_bucket_overflow")
-    df = checkpoint.read(spark, name="minhash_bucket_overflow",
-                         work_dir=work_dir)
-    assert {"table_id", "band_key", "n_overflow"} <= set(df.columns)
 
 
 def test_boilerplate_hot_group_clustered(result):

@@ -35,8 +35,7 @@ STAGE_ORDER = [
 ]
 SPINE = ["documents", "assignments", "representatives", "cluster_sizes",
          "report"]
-SIDE_TABLES = {"simhash_bucket_overflow", "minhash_bucket_overflow",
-               "metrics_stages", "metrics_partitions"}
+SIDE_TABLES = {"metrics_stages", "metrics_partitions"}
 
 
 def _footer_rows(path: str) -> int:
@@ -169,11 +168,6 @@ def status(work_dir: str) -> dict:
                 st = _table_status(work_dir, d[:-8])
                 if st is not None:
                     tables.setdefault(d[:-8], st)
-        for name in sorted(SIDE_TABLES - {"metrics_stages",
-                                          "metrics_partitions"}):
-            st = _table_status(work_dir, name)
-            if st is not None:
-                tables[name] = st
 
     streaming = _streaming_status(work_dir)
     committed = [n for n in STAGE_ORDER

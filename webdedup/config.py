@@ -81,10 +81,9 @@ class DedupConfig:
     hyperplane_probe_bits: int = 2
 
     # --- skew / scale controls ---
-    max_bucket_size: int = 200    # cap: quarantine LSH buckets larger than this
-                                  # (analog of reference max_candidates,
-                                  #  simhash.cpp:243-245)
-    salt_factor: int = 8          # salt hot keys into this many sub-keys
+    # document-frequency cap of the shingle (jaccard candidates) and anchor
+    # (substring) indexes; the DuckDB twins inline the same constant
+    max_bucket_size: int = 200
 
     # --- connected components ---
     cc_max_iterations: int = 50

@@ -159,18 +159,6 @@ def h60_col(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def h32_col(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
-def h64_hi_col(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
-def h64_lo_col(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 9, 8), 16, 10).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # DuckDB SQL fragments (oracle side)
 # ---------------------------------------------------------------------------

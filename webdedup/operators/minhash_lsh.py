@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from webdedup.config import DedupConfig, DEFAULT
 from webdedup.functions.signatures import minhash_col
 from webdedup.operators.jaccard import jaccard_verify
-from webdedup.operators.simhash_lsh import cap_buckets
+from webdedup.operators.simhash_lsh import band_candidates
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
@@ -67,17 +67,6 @@ def minhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
     )
 
 
-def minhash_candidates(bands: DataFrame) -> DataFrame:
-    left = bands.select(F.col("id").alias("a"), "table_id", "band_key")
-    right = bands.select(F.col("id").alias("b"), "table_id", "band_key")
-    return (
-        left.join(right, ["table_id", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def signature_jaccard(cands: DataFrame, sigs: DataFrame) -> DataFrame:
     """Estimated Jaccard = fraction of agreeing signature positions —
     the reference's re-rank metric (``minhash_search.py:81-83``).
@@ -114,19 +103,16 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                   threshold: float | None = None,
                   sigs: DataFrame | None = None,
                   sets: DataFrame | None = None,
-                  skew_mode: str = "salt",
                   est_prefilter: float | None = None,
                   fast_accept: float | None = None,
                   collapse_identical: bool = False,
                   cands: DataFrame | None = None,
-                  ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, overflow_quarantine): banded LSH candidates verified by EXACT
-    shingle Jaccard >= threshold — the MinHash twin of ``simhash_edges``.
+                  ) -> DataFrame:
+    """(a, b, jaccard): banded LSH candidates verified by EXACT shingle
+    Jaccard >= threshold — the MinHash twin of ``simhash_edges``.
 
-    ``skew_mode``: 'salt' (default) spreads hot bands losslessly (overflow
-    frame is empty); 'cap' keeps ``cfg.max_bucket_size`` members per bucket
-    and RETURNS the quarantined band rows (never silently dropped —
-    north_rule: no silent caps); None disables skew handling.
+    Candidates come from the plain band self-join (``band_candidates``);
+    AQE skew-join splits a residual hot band bucket at runtime.
 
     ``est_prefilter``: optional signature-estimate Jaccard cutoff applied
     BEFORE the exact exploded-shingle verify — the reference's re-rank
@@ -152,14 +138,14 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     apart.  The decision is deterministic for a given corpus (seeded
     perms), so results are reproducible run-to-run.  Leave ``None``
     (default) for exact-verify semantics (no ``estimated`` column) — the
-    oracle-checked ``minhash_pairs`` path never sets it.
+    oracle-checked ``minhash_lsh_pairs`` query never sets it.
 
     ``sigs``/``sets``: optional materialized signature / shingle-set tables
     (stage tables in the pipeline) — without them the whole signature UDF
     subtree is embedded in a self-join plan and executes once per join arm.
 
     ``cands``: optional PRECOMPUTED banded candidate frame (a, b) built over
-    the RAW signature table — ``minhash_candidates(minhash_bands(sigs))``,
+    the RAW signature table — ``band_candidates(minhash_bands(sigs))``,
     the exact frame the ``minhash_est_jaccard`` query ranks (r7: the entry
     memoizes it once per session and shares it across the minhash derived
     views instead of paying the band self-join per query).  Band collisions
@@ -168,8 +154,7 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     frame to non-sentinel docs (two anti-joins against the tiny empty-doc
     id set) yields EXACTLY the pair set of banding the sentinel-filtered
     table, by construction on any corpus.  Only supported with
-    ``skew_mode=None`` / ``collapse_identical=False`` (the caller that
-    built the frame already chose its own skew handling).
+    ``collapse_identical=False`` (the collapse bands representatives only).
 
     ``collapse_identical``: pre-collapse documents with IDENTICAL shingle
     sets into one representative before banding (VERDICT r4 #4: exact
@@ -185,11 +170,10 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     shingle hashing the operator is already built on).  Output is
     BIT-IDENTICAL to ``collapse_identical=False`` (pytest-pinned both
     modes, including an empty-text doc pair); only the work changes.
-    Unsupported with ``skew_mode='cap'`` (overflow quarantine counts are
-    per-document semantics).  Empty shingle sets never pair in EITHER
-    mode: they are filtered out before banding (sentinel-signature filter
-    below), matching the exact-verify semantics where empty-vs-anything
-    Jaccard is 0 or 0/0 -> NULL and is dropped.
+    Empty shingle sets never pair in EITHER mode: they are filtered out
+    before banding (sentinel-signature filter below), matching the
+    exact-verify semantics where empty-vs-anything Jaccard is 0 or 0/0 ->
+    NULL and is dropped.
     """
     t = cfg.minhash_threshold if threshold is None else threshold
     if sigs is None and sets is None and df is not None:
@@ -215,17 +199,16 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     # from banding entirely: fixes that divergence (r5 ADVICE), makes both
     # modes match the exact-verify semantics ("two unrelated empty docs are
     # not Jaccard-1.0 dups"), and removes the empty-doc mega-bucket a real
-    # crawl would otherwise salt around.  Only degenerate threshold 0.0
+    # crawl would otherwise produce.  Only degenerate threshold 0.0
     # could notice (empty-vs-nonempty J=0 pairs — which banding essentially
     # never surfaces as candidates anyway).
     from webdedup.functions.hashing import MERSENNE61
     sentinel = F.element_at("minhash", 1) == F.lit(MERSENNE61)
     if cands is not None:
-        if collapse_identical or skew_mode is not None:
+        if collapse_identical:
             raise ValueError(
                 "cands (a precomputed banded candidate frame) is only "
-                "supported with skew_mode=None and collapse_identical="
-                "False — the builder of the frame owns skew handling")
+                "supported with collapse_identical=False")
         # the frame was banded over the RAW signature table; restrict to
         # non-sentinel docs (see docstring: pairwise collisions make this
         # exactly the filtered-table pair set).  AQE turns these into
@@ -236,29 +219,11 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                  .join(empty_ids.withColumnRenamed("id", "b"), "b", "left_anti"))
     sigs = sigs.filter(~sentinel)
     if collapse_identical:
-        if skew_mode == "cap":
-            raise ValueError(
-                "collapse_identical is lossless only for the lossless skew "
-                "modes; 'cap' quarantine counts are per-document")
         return _collapsed_minhash_edges(
-            df, id_col, text_col, cfg, t, sigs, sets, skew_mode,
-            est_prefilter, fast_accept)
-    if cands is not None:
-        overflow = minhash_bands(sigs.limit(0), cfg)  # empty, bands-shaped
-    else:
-        bands = minhash_bands(sigs, cfg)
-        overflow = bands.limit(0)
-        if skew_mode == "salt":
-            from webdedup.operators.simhash_lsh import salted_band_candidates
-            cands = salted_band_candidates(
-                bands, cfg.max_bucket_size, cfg.salt_factor)
-        elif skew_mode == "cap":
-            kept, overflow = cap_buckets(bands, cfg.max_bucket_size)
-            cands = minhash_candidates(kept)
-        elif skew_mode is None:
-            cands = minhash_candidates(bands)
-        else:
-            raise ValueError(skew_mode)
+            df, id_col, text_col, cfg, t, sigs, sets, est_prefilter,
+            fast_accept)
+    if cands is None:
+        cands = band_candidates(minhash_bands(sigs, cfg))
     if est_prefilter is not None or fast_accept is not None:
         est = signature_jaccard(cands, sigs)
         if est_prefilter is not None:
@@ -276,23 +241,21 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
             verified = jaccard_verify(uncertain, df, id_col, text_col, cfg,
                                       t, sets=sets, restrict_sets=True
                                       ).withColumn("estimated", F.lit(False))
-            return verified.unionByName(accepted), overflow
+            return verified.unionByName(accepted)
         cands = est.select("a", "b")
-    pairs = jaccard_verify(cands, df, id_col, text_col, cfg, t, sets=sets)
-    return pairs, overflow
+    return jaccard_verify(cands, df, id_col, text_col, cfg, t, sets=sets)
 
 
 def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
                              text_col: str, cfg: DedupConfig, t: float,
                              sigs: DataFrame, sets: DataFrame | None,
-                             skew_mode: str | None,
                              est_prefilter: float | None,
                              fast_accept: float | None,
-                             ) -> tuple[DataFrame, DataFrame]:
+                             ) -> DataFrame:
     """``minhash_edges(collapse_identical=True)`` body — see its docstring.
 
     Shape: class key per doc -> min-id representative -> the ORDINARY
-    rep-level pipeline (bands/salt/est/verify, recursion with the flag
+    rep-level pipeline (bands/est/verify, recursion with the flag
     off) -> member expansion joins + the intra-class 1.0 clique.  All
     extra joins move narrow (id, rep) longs; the heavy columns (128-long
     signatures, shingle arrays) now flow for representatives only.
@@ -315,12 +278,11 @@ def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
         .localCheckpoint(eager=False)  # rep filter + two expansion arms
     )
     reps_ids = members.filter(F.col("id") == F.col("rep")).select("id")
-    rep_pairs, overflow = minhash_edges(
+    rep_pairs = minhash_edges(
         df, id_col, text_col, cfg, t,
         sigs=sigs.join(reps_ids, "id", "left_semi"),
         sets=sets.join(reps_ids, "id", "left_semi"),
-        skew_mode=skew_mode, est_prefilter=est_prefilter,
-        fast_accept=fast_accept, collapse_identical=False)
+        est_prefilter=est_prefilter, fast_accept=fast_accept)
 
     value_cols = [c for c in rep_pairs.columns if c not in ("a", "b")]
     ma = members.select(F.col("rep").alias("a"), F.col("id").alias("na"))
@@ -340,29 +302,5 @@ def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
                                  F.lit(float(fast_accept) <= 1.0))
     if t > 1.0 or (est_prefilter or 0.0) > 1.0:
         intra = intra.limit(0)  # nothing passes those cutoffs uncollapsed
-    return cross.unionByName(intra), overflow
+    return cross.unionByName(intra)
 
-
-def minhash_pairs(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                  threshold: float | None = None,
-                  sigs: DataFrame | None = None,
-                  sets: DataFrame | None = None,
-                  skew_mode: str | None = None,
-                  est_prefilter: float | None = None,
-                  collapse_identical: bool = False,
-                  cands: DataFrame | None = None) -> DataFrame:
-    """(a, b, jaccard) convenience wrapper over ``minhash_edges`` for the
-    LOSSLESS modes only (``skew_mode`` in {None, 'salt'}).  The lossy 'cap'
-    mode returns a quarantine frame that must not be discarded — call
-    ``minhash_edges`` and handle it (e.g. write a ``*_bucket_overflow``
-    stage table as the pipeline does for SimHash)."""
-    if skew_mode == "cap":
-        raise ValueError(
-            "skew_mode='cap' quarantines candidates; use minhash_edges() "
-            "and persist/report the returned overflow frame")
-    pairs, _empty = minhash_edges(
-        df, id_col, text_col, cfg, threshold, sigs=sigs, sets=sets,
-        skew_mode=skew_mode, est_prefilter=est_prefilter,
-        collapse_identical=collapse_identical, cands=cands)
-    return pairs

@@ -24,19 +24,24 @@ recall** (SURVEY §2.3 J2):
   than 'single'.  This is the 100 TB path.
 
 Hot buckets (boilerplate pages collapsing to one fingerprint region) are
-handled upstream by fingerprint-dedup (``simhash_edges``) and by the bucket
-cap, the analog of the reference's ``max_candidates`` (``simhash.cpp:243-245``).
+handled upstream by fingerprint-dedup (``simhash_edges``) and inside the
+bucket by the chunked verify (``blocked_hamming_pairs``).  Unlike the
+reference's ``max_candidates`` cap (``simhash.cpp:243-245``), no pair is
+ever dropped.
 """
 
 from __future__ import annotations
 
 from itertools import combinations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from webdedup.config import DedupConfig, DEFAULT
 from webdedup.functions.signatures import simhash64_col
+from webdedup.operators.bucket_scan import bucket_scan
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
@@ -95,28 +100,6 @@ def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
     )
 
 
-def cap_buckets(bands: DataFrame, max_bucket: int,
-                id_order: str = "id") -> tuple[DataFrame, DataFrame]:
-    """Split the band table into (kept, quarantined-overflow).
-
-    Keeps the first ``max_bucket`` members (by id) of each bucket and routes
-    the rest to a quarantine frame — the distributed analog of the
-    reference's candidate cap (``simhash.cpp:243-245``), but lossless: the
-    overflow is reported, not silently dropped (north_rule: no silent caps).
-    """
-    spark = bands.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # explicit repartition: the band table comes from an explode, whose
-    # size the planner underestimates — without this, AQE can coalesce the
-    # window shuffle to 1 partition and sort the whole table on one core
-    bands = bands.repartition(n_part, "table_id", "band_key")
-    w = Window.partitionBy("table_id", "band_key").orderBy(id_order)
-    ranked = bands.withColumn("_rk", F.row_number().over(w))
-    kept = ranked.filter(F.col("_rk") <= max_bucket).drop("_rk")
-    overflow = ranked.filter(F.col("_rk") > max_bucket).drop("_rk")
-    return kept, overflow
-
-
 def band_candidates(bands: DataFrame) -> DataFrame:
     """distinct (a, b) id pairs (a < b) colliding in >= 1 table.
 
@@ -168,110 +151,49 @@ def blocked_hamming_pairs(bands: DataFrame, threshold: int,
     spent 1,400 s mostly sorting/spilling candidate rows.  Verifying
     in-bucket turns those 148M shuffled rows into 148M numpy popcounts
     (XOR + byte-LUT, ~1e9/s/core) inside one pass over the band table,
-    emitting only the verified pairs (~0.3%% of candidates).
+    emitting only the verified pairs (~0.3% of candidates).
 
-    Plan shape: repartition + sortWithinPartitions on (table_id,
-    band_key), then ``mapInPandas`` with a carry-over buffer for the
-    bucket that straddles an Arrow-batch boundary — buckets stay
-    contiguous per partition, so each is processed exactly once, and
-    per-group pandas overhead is avoided (a groupBy-``applyInPandas``
-    would invoke Python once per bucket — tens of millions of times at
-    web scale; here singleton buckets cost one vectorized boundary scan).
-    Per-bucket work is chunked (``chunk_rows`` x ``chunk_cols``) so a
-    pathological mega-bucket is processed in bounded memory on one task;
-    buckets large enough to need MORE than one task should be capped
-    upstream (``cap_buckets``) — at 1M docs the largest rep bucket holds
+    Plan shape: the shared sorted-bucket scan (``bucket_scan``) with a
+    popcount scorer.  Per-bucket work is chunked (``chunk_rows`` x
+    ``chunk_cols``), so a pathological mega-bucket is processed in
+    bounded memory on one task; at 1M docs the largest rep bucket holds
     670 rows.
 
     Output is canonicalized (a < b) and ``.distinct()`` deduplicates
     across tables on VERIFIED rows only.  Bit-identical to the join
     verify (pytest-pinned; the sf0.01 oracle rows check it end-to-end).
     """
-    id_t = dict(bands.dtypes)["id"]
-    out_schema = f"a {id_t}, b {id_t}, hamming int"
-    # no fixed partition count (r7): a hash repartition WITHOUT an explicit
-    # n stays AQE-managed, so the exchange is coalesced to ~1 partition at
-    # bench scale (the 32-task floor dominated this stage on small inputs)
-    # and advisory-sized at production scale — scale-adaptive, not a local
-    # constant (guide §2.2/§2.5; optimization-round rule on parameterised
-    # partitioning)
-    arranged = (bands.select("id", "simhash", "table_id", "band_key")
-                .repartition("table_id", "band_key")
-                .sortWithinPartitions("table_id", "band_key"))
+    id_t = bands.schema["id"].dataType
+    out_schema = StructType([StructField("a", id_t), StructField("b", id_t),
+                             StructField("hamming", IntegerType())])
     thr = int(threshold)
+    lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
-    def verify(batches):
-        import numpy as np
-        import pandas as pd
-
-        lut = np.array([bin(i).count("1") for i in range(256)],
-                       dtype=np.uint8)
-
-        def bucket_pairs(ids, sigs):
-            m = len(sigs)
-            for i0 in range(0, m, chunk_rows):
-                si = sigs[i0:i0 + chunk_rows]
-                for j0 in range(max(i0, 0), m, chunk_cols):
-                    sj = sigs[j0:j0 + chunk_cols]
-                    x = (si[:, None] ^ sj[None, :])
-                    h = lut[x.view(np.uint8).reshape(len(si), len(sj), 8)] \
-                        .sum(axis=2, dtype=np.uint16)
-                    ii, jj = np.nonzero(h <= thr)
-                    gi, gj = ii + i0, jj + j0
-                    keep = gi < gj  # strict upper triangle: self + mirror out
-                    if not keep.any():
-                        continue
-                    gi, gj, hv = gi[keep], gj[keep], h[ii[keep], jj[keep]]
-                    ia, ib = ids[gi], ids[gj]
-                    sw = ib < ia
-                    ia2 = np.where(sw, ib, ia)
-                    ib2 = np.where(sw, ia, ib)
-                    yield ia2, ib2, hv.astype(np.int32)
-
-        def process(region: pd.DataFrame):
-            t = region["table_id"].to_numpy()
-            k = region["band_key"].to_numpy()
-            change = np.empty(len(t), dtype=bool)
-            change[0] = True
-            change[1:] = (t[1:] != t[:-1]) | (k[1:] != k[:-1])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(t))
-            ids = region["id"].to_numpy()
-            sigs = region["simhash"].to_numpy().astype(np.int64) \
-                .view(np.uint64)
-            outs = []
-            for s, e in zip(starts, ends):
-                if e - s < 2:  # singleton bucket: no pairs
+    def score(cols):
+        ids = cols["id"]
+        sigs = np.asarray(cols["simhash"], dtype=np.int64).view(np.uint64)
+        m = len(sigs)
+        for i0 in range(0, m, chunk_rows):
+            si = sigs[i0:i0 + chunk_rows]
+            for j0 in range(i0, m, chunk_cols):
+                sj = sigs[j0:j0 + chunk_cols]
+                x = (si[:, None] ^ sj[None, :])
+                h = lut[x.view(np.uint8).reshape(len(si), len(sj), 8)] \
+                    .sum(axis=2, dtype=np.uint16)
+                ii, jj = np.nonzero(h <= thr)
+                gi, gj = ii + i0, jj + j0
+                keep = gi < gj  # strict upper triangle: self + mirror out
+                if not keep.any():
                     continue
-                for ia, ib, hv in bucket_pairs(ids[s:e], sigs[s:e]):
-                    outs.append((ia, ib, hv))
-            if outs:
-                yield pd.DataFrame({
-                    "a": np.concatenate([o[0] for o in outs]),
-                    "b": np.concatenate([o[1] for o in outs]),
-                    "hamming": np.concatenate([o[2] for o in outs]),
-                })
+                gi, gj, hv = gi[keep], gj[keep], h[ii[keep], jj[keep]]
+                ia, ib = ids[gi], ids[gj]
+                sw = ib < ia
+                yield (np.where(sw, ib, ia), np.where(sw, ia, ib),
+                       hv.astype(np.int32))
 
-        pending: pd.DataFrame | None = None
-        for b in batches:
-            df = pd.concat([pending, b]) if pending is not None else b
-            if len(df) == 0:
-                pending = None
-                continue
-            tl = df["table_id"].iat[-1]
-            kl = df["band_key"].iat[-1]
-            tail = ((df["table_id"].to_numpy() == tl)
-                    & (df["band_key"].to_numpy() == kl))
-            if tail.all():  # whole buffer is one bucket — keep accumulating
-                pending = df
-                continue
-            cut = len(df) - int(tail[::-1].argmin())
-            head, pending = df.iloc[:cut], df.iloc[cut:]
-            yield from process(head)
-        if pending is not None and len(pending):
-            yield from process(pending)
-
-    return arranged.mapInPandas(verify, schema=out_schema).distinct()
+    rows = bands.select("id", "simhash", "table_id", "band_key")
+    return bucket_scan(rows, ["table_id", "band_key"], score,
+                       out_schema).distinct()
 
 
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -296,27 +218,18 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                   text_col: str = "text", cfg: DedupConfig = DEFAULT,
                   scheme: str = "combo",
-                  sigs: DataFrame | None = None,
-                  skew_mode: str = "blocked") -> tuple[DataFrame, DataFrame]:
-    """Scale path for the pipeline: returns (edges, overflow_quarantine).
+                  sigs: DataFrame | None = None) -> DataFrame:
+    """Scale path for the pipeline: (a, b) edges.
 
     Docs are first collapsed to *distinct fingerprints* (exact clones and
     identical-fingerprint docs form star edges directly — the boilerplate
     hot group contributes ONE representative to the LSH join instead of
-    millions of rows), then LSH runs over fingerprint representatives with
-    bucket capping.  Edge set is equivalent for connected components.
+    millions of rows), then LSH runs over fingerprint representatives,
+    verified inside each bucket (``blocked_hamming_pairs``).  Edge set is
+    equivalent for connected components.
 
     ``sigs``: optional materialized (id, simhash) stage table; strongly
     recommended — it keeps the signature UDF out of the self-join plan.
-
-    ``skew_mode``: 'blocked' (default since r6 — the 1M-doc cliff fix,
-    see ``blocked_hamming_pairs``) verifies inside each bucket with
-    vectorized popcount, lossless, bounded memory via chunking; 'salt'
-    spreads hot buckets over salted sub-keys through the join-shaped
-    verify with NO recall loss; 'cap' keeps only the first
-    ``max_bucket_size`` members per bucket and quarantines the rest
-    (reference-cap semantics).  All three emit the identical edge set on
-    un-capped data (pytest-pinned).
     """
     if sigs is None:
         # lazy checkpoint: keep the UDF out of the multi-arm join plan
@@ -329,82 +242,6 @@ def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
         .select(F.col("rep").alias("a"), F.col("id").alias("b"))
     )
     reps = tagged.filter(F.col("id") == F.col("rep")).select("id", "simhash")
-    bands = simhash_bands(reps, cfg, scheme)
-    if skew_mode == "blocked":
-        rep_pairs = blocked_hamming_pairs(
-            bands, cfg.hamming_threshold).select("a", "b")
-        overflow = bands.limit(0)  # lossless: nothing quarantined
-    elif skew_mode == "salt":
-        cands = salted_band_candidates(
-            bands, cfg.max_bucket_size, cfg.salt_factor)
-        overflow = bands.limit(0)  # lossless: nothing quarantined
-        rep_pairs = hamming_verify(cands, reps,
-                                   cfg.hamming_threshold).select("a", "b")
-    elif skew_mode == "cap":
-        kept, overflow = cap_buckets(bands, cfg.max_bucket_size)
-        rep_pairs = hamming_verify(band_candidates(kept), reps,
-                                   cfg.hamming_threshold).select("a", "b")
-    else:
-        raise ValueError(skew_mode)
-    return clone_edges.unionByName(rep_pairs), overflow
-
-
-def salted_band_candidates(bands: DataFrame, hot_threshold: int,
-                           salt_factor: int) -> DataFrame:
-    """Exact candidate pairs with EXPLICIT SALTING of hot buckets.
-
-    ``band_candidates`` leaves hot buckets (boilerplate fingerprint regions)
-    as single shuffle keys: one reducer gets an O(m^2) pair explosion.  This
-    variant splits every bucket larger than ``hot_threshold`` into
-    ``salt_factor`` deterministic sub-groups (salt = xxhash64(id) % k) and
-    produces the SAME pair set with bounded per-key work:
-
-    - left side:  each hot-bucket member keyed by its own salt;
-    - right side: each member REPLICATED once per salt value;
-    - join on (table_id, band_key, salt), keep a < b.
-
-    Every pair (a, b) collides exactly under salt(a) (and salt(b) on the
-    mirrored arm, deduped by ``a < b`` + distinct), so recall is unchanged —
-    the hot key's quadratic work is spread over k reducers at the cost of
-    k-times replication of hot-bucket rows only.  Cold buckets skip the
-    machinery entirely.  This is the north_rule's "explicit salting of hot
-    LSH bands"; the reference's analog is the max_candidates cap
-    (simhash.cpp:243-245), which silently LOSES pairs — salting doesn't.
-    """
-    spark = bands.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    bands = bands.localCheckpoint(eager=False)  # probe + split + join arms
-    hot_sizes = (bands.groupBy("table_id", "band_key")
-                 .agg(F.count(F.lit(1)).alias("_bsz"))
-                 .filter(F.col("_bsz") > hot_threshold)
-                 .localCheckpoint(eager=False))  # probe action + broadcast
-    # Adaptive skip: ONE tiny agg action decides whether any bucket is hot.
-    # When none is (the common case outside boilerplate storms), the
-    # tag/split/salt machinery — 4-5 small sequential shuffles whose fixed
-    # per-stage latency dominated edges_simhash's 1->4-core scaling (1.7x
-    # recorded in r02) — is skipped entirely.  When data IS skewed the probe
-    # cost is noise next to the salted join it enables; at web scale the
-    # probe is one partial-agg job over the band table.
-    if hot_sizes.isEmpty():
-        return band_candidates(bands)
-    tagged = bands.join(F.broadcast(hot_sizes),
-                        ["table_id", "band_key"], "left")
-    cold = tagged.filter(F.col("_bsz").isNull()).drop("_bsz")
-    hot = tagged.filter(F.col("_bsz").isNotNull()).drop("_bsz")
-
-    cold_pairs = band_candidates(cold)
-
-    salt = (F.xxhash64("id") % salt_factor + salt_factor) % salt_factor
-    hot_left = hot.select("id", "table_id", "band_key",
-                          salt.alias("_salt")).withColumnRenamed("id", "a")
-    salts = F.explode(F.array(*[F.lit(i) for i in range(salt_factor)]))
-    hot_right = (hot.select("id", "table_id", "band_key")
-                 .withColumn("_salt", salts)
-                 .withColumnRenamed("id", "b"))
-    hot_pairs = (
-        hot_left.repartition(n_part, "table_id", "band_key", "_salt")
-        .join(hot_right, ["table_id", "band_key", "_salt"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    return cold_pairs.unionByName(hot_pairs).distinct()
+    rep_pairs = blocked_hamming_pairs(
+        simhash_bands(reps, cfg, scheme), cfg.hamming_threshold)
+    return clone_edges.unionByName(rep_pairs.select("a", "b"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
 from webdedup.functions.signatures import vector_simhash_udf
+from webdedup.operators.bucket_scan import bucket_scan
 from webdedup.plans.partitions import ensure_min_partitions
 
 
@@ -181,7 +182,7 @@ def lsh_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
       members is partitioned into ceil(n/max)² sub-tasks of bounded size
       (same pairs, same values — only the task granularity changes), so a
       single degenerate key can neither OOM one executor nor serialize the
-      stage — the vector-side analog of the text operators' salting.
+      stage.
     - ``'fold'``: the round-2 plan — ids-only band join, distinct (a, b),
       vectors joined back once per side, cosine as a Catalyst ``aggregate``
       fold.  Kept as the pure-Catalyst reference; same output bit-for-bit.
@@ -281,13 +282,8 @@ def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
     LEFT in sub-buckets (g, *) and (if ``ex``) as RIGHT in (*, g), so
     every (left, right) pair meets in exactly one sub-bucket and per-task
     memory is bounded by ~2·max rows and a max² cosine block (~32 MB at
-    the 2048 default).  The union is hash-repartitioned on (keys, sl, sr)
-    WITHOUT a fixed partition count (AQE right-sizes the exchange: ~1
-    partition at bench scale, advisory-sized at production scale), sorted
-    within partitions, and verified by a ``mapInPandas`` boundary scan —
-    one Python invocation per Arrow batch instead of one per bucket, the
-    ``blocked_hamming_pairs`` shape.  A bucket straddling an Arrow-batch
-    boundary is carried over, so each bucket is processed exactly once.
+    the 2048 default).  The union is verified by the shared sorted-bucket
+    scan (``bucket_scan``) over (keys, sl, sr) with a GEMM scorer.
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -296,12 +292,12 @@ def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
            .agg(F.count(F.lit(1)).alias("_n"))
            .filter(F.col("_n") > max_bucket_rows)
            .localCheckpoint(eager=False))  # probe action + broadcast reuse
-    # Adaptive skip (r7, the salted_band_candidates pattern): ONE tiny
-    # keys-only agg action decides whether ANY bucket is oversized.  When
-    # none is (the common case), the broadcast join + two-arm union the
-    # grid split needs — 2-3 extra stages whose fixed latency dominated
-    # this operator at bench scale — vanish from the plan entirely; when
-    # data IS skewed the probe cost is noise next to the join it shapes.
+    # Adaptive skip (r7): ONE tiny keys-only agg action decides whether
+    # ANY bucket is oversized.  When none is (the common case), the
+    # broadcast join + two-arm union the grid split needs — 2-3 extra
+    # stages whose fixed latency dominated this operator at bench scale —
+    # vanish from the plan entirely; when data IS skewed the probe cost is
+    # noise next to the join it shapes.
     if hot.isEmpty():
         gridded = rows.select(
             "id", "vec", *key_cols,
@@ -337,81 +333,35 @@ def _blocked_cosine_pairs(rows: DataFrame, key_cols: list[str], id_type,
                     .select("id", "vec", *key_cols,
                             "s.sl", "s.sr", "s.lft", "s.rgt"))
         gridded = cold.unionByName(hot_rows)
-    gkeys = [*key_cols, "sl", "sr"]
-    arranged = gridded.repartition(*gkeys).sortWithinPartitions(*gkeys)
     out_schema = StructType([StructField("a", id_type),
                              StructField("b", id_type),
                              StructField("cosine", DoubleType())])
     thr = None if threshold is None else float(threshold)
     dr = bool(directional)
 
-    def verify(batches):
-        def process(region: pd.DataFrame):
-            n = len(region)
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for c in gkeys:
-                kcol = region[c].to_numpy()
-                change[1:] |= kcol[1:] != kcol[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], n)
-            ids = region["id"].to_numpy()
-            vecs = region["vec"].to_numpy()
-            lft = region["lft"].to_numpy()
-            rgt = region["rgt"].to_numpy()
-            outs = []
-            for s, e in zip(starts, ends):
-                lm, rm = lft[s:e], rgt[s:e]
-                if e - s < 2 or not rm.any() or not lm.any():
-                    continue
-                X = np.stack(vecs[s:e]).astype(np.float64)
-                nrm = np.sqrt((X * X).sum(axis=1))
-                XL, nl = X[lm], nrm[lm]
-                XR, nr = X[rm], nrm[rm]
-                cos = (XL @ XR.T) / np.outer(nl, nr)
-                if thr is not None:
-                    r6 = np.floor(cos * 1e6 + 0.5) / 1e6  # HALF_UP; thr > 0
-                    il, ir = np.nonzero(r6 >= thr)
-                else:
-                    il, ir = np.nonzero(np.ones(cos.shape, dtype=bool))
-                if not len(il):
-                    continue
-                ida = ids[s:e][lm][il]
-                idb = ids[s:e][rm][ir]
-                keep = ida != idb
-                if not keep.any():
-                    continue
-                ida, idb, raw = ida[keep], idb[keep], cos[il, ir][keep]
-                if dr:
-                    outs.append((ida, idb, raw))
-                else:
-                    outs.append((np.minimum(ida, idb),
-                                 np.maximum(ida, idb), raw))
-            if outs:
-                yield pd.DataFrame({
-                    "a": np.concatenate([o[0] for o in outs]),
-                    "b": np.concatenate([o[1] for o in outs]),
-                    "cosine": np.concatenate([o[2] for o in outs])})
+    def score(cols):
+        lm, rm = cols["lft"], cols["rgt"]
+        if not rm.any() or not lm.any():
+            return
+        X = np.stack(cols["vec"]).astype(np.float64)
+        nrm = np.sqrt((X * X).sum(axis=1))
+        cos = (X[lm] @ X[rm].T) / np.outer(nrm[lm], nrm[rm])
+        if thr is not None:
+            r6 = np.floor(cos * 1e6 + 0.5) / 1e6  # HALF_UP; thr > 0
+            il, ir = np.nonzero(r6 >= thr)
+        else:
+            il, ir = np.nonzero(np.ones(cos.shape, dtype=bool))
+        ida, idb = cols["id"][lm][il], cols["id"][rm][ir]
+        keep = ida != idb
+        if not keep.any():
+            return
+        ida, idb, raw = ida[keep], idb[keep], cos[il, ir][keep]
+        if dr:
+            yield ida, idb, raw
+        else:
+            yield np.minimum(ida, idb), np.maximum(ida, idb), raw
 
-        pending: pd.DataFrame | None = None
-        for b in batches:
-            dfb = pd.concat([pending, b]) if pending is not None else b
-            if len(dfb) == 0:
-                pending = None
-                continue
-            tail = np.ones(len(dfb), dtype=bool)
-            for c in gkeys:
-                tail &= dfb[c].to_numpy() == dfb[c].iat[-1]
-            if tail.all():  # whole buffer is one bucket — keep accumulating
-                pending = dfb
-                continue
-            cut = len(dfb) - int(tail[::-1].argmin())
-            head, pending = dfb.iloc[:cut], dfb.iloc[cut:]
-            yield from process(head)
-        if pending is not None and len(pending):
-            yield from process(pending)
-
-    return arranged.mapInPandas(verify, schema=out_schema)
+    return bucket_scan(gridded, [*key_cols, "sl", "sr"], score, out_schema)
 
 
 def _lsh_blocked_verify(sig: DataFrame, id_type, threshold: float,
@@ -423,7 +373,7 @@ def _lsh_blocked_verify(sig: DataFrame, id_type, threshold: float,
     <= ceil(probe/2); ``ex`` marks rows whose mask weight <= floor(probe/2)
     (right-arm eligible).  The verify itself is the shared
     ``_blocked_cosine_pairs`` kernel (hot buckets grid-split losslessly,
-    cold rows zero-HOF, sorted ``mapInPandas`` boundary scan).
+    cold rows zero-HOF, sorted-bucket scan).
     """
     p_left = (probe_bits + 1) // 2
     p_right = probe_bits // 2

@@ -108,7 +108,11 @@ def substring_pairs_from_index(idx: DataFrame, min_anchors: int = 2,
         n_part = int(idx.sparkSession.conf.get(
             "spark.sql.shuffle.partitions", "32"))
         w = Window.partitionBy("anchor")
-        idx = (idx.repartition(n_part, "anchor")  # see cap_buckets note
+        # explicit repartition: the anchor index comes from an explode,
+        # whose size the planner underestimates — without it AQE can
+        # coalesce the window shuffle to 1 partition and sort the whole
+        # index on one core
+        idx = (idx.repartition(n_part, "anchor")
                .withColumn("_df", F.count(F.lit(1)).over(w))
                .filter(F.col("_df") <= max_df).drop("_df"))
     return (

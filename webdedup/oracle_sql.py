@@ -394,7 +394,7 @@ JOIN sigarr sb ON sb.doc_id = c.b
 
 def minhash_lsh_pairs(cfg: DedupConfig = DEFAULT,
                       threshold: float | None = None) -> str:
-    """Twin of ``minhash_lsh.minhash_pairs``: banded-LSH candidates
+    """Twin of ``minhash_lsh.minhash_edges``: banded-LSH candidates
     verified by EXACT shingle Jaccard >= threshold.  Both stages are
     deterministic (seeded perms inlined; banding is slice equality), so the
     'probabilistic' LSH query is oracle-checkable after all."""

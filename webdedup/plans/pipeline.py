@@ -169,13 +169,9 @@ def run(
         ))
     if "simhash" in matchers:
         def _sim():
-            e, overflow = simhash_lsh.simhash_edges(
+            e = simhash_lsh.simhash_edges(
                 None, cfg=cfg, scheme=simhash_scheme,
                 sigs=sigs.select("id", "simhash"))
-            checkpoint.write(
-                overflow.groupBy("table_id", "band_key")
-                .agg(F.count(F.lit(1)).alias("n_overflow")),
-                work_dir, "simhash_bucket_overflow")
             if simhash_confirm_jaccard is not None:
                 if simhash_confirm_mode == "exact":
                     from webdedup.operators.jaccard import jaccard_verify
@@ -224,19 +220,14 @@ def run(
             fast_cut = (min(1.0, cfg.jaccard_threshold + 3 * sigma)
                         if minhash_fast_accept == "auto"
                         else minhash_fast_accept)
-            e, overflow = minhash_lsh.minhash_edges(
+            e = minhash_lsh.minhash_edges(
                 docs, cfg=cfg, threshold=cfg.jaccard_threshold,
-                skew_mode="salt", est_prefilter=est_cut,
-                fast_accept=fast_cut,
+                est_prefilter=est_cut, fast_accept=fast_cut,
                 sigs=sigs.select("id", "minhash"),
                 sets=sigs.select("id", "shingles"),
                 # bit-identical (pytest-pinned); exact-dup cliques skip
                 # banding/verify and expand from one representative
                 collapse_identical=True)
-            checkpoint.write(
-                overflow.groupBy("table_id", "band_key")
-                .agg(F.count(F.lit(1)).alias("n_overflow")),
-                work_dir, "minhash_bucket_overflow")
             return e.select(F.col("a").alias("u"), F.col("b").alias("v"))
         edge_frames.append(stage("edges_minhash", _min))
     if "substring" in matchers:

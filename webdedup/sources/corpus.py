@@ -14,7 +14,8 @@ groups of pages where slot 0 is the base document and subsequent slots are
 - ``singleton`` : unrelated page (must NOT be clustered)
 
 Group 0 is a "boilerplate" hot group — many near-empty pages sharing one tiny
-template — to exercise hot-LSH-band capping/salting (north_rule).
+template — to exercise the hot-key paths: fingerprint collapse before LSH and
+the bucket-local verify (north_rule).
 
 Everything is a pure function of ``(seed, group_id, slot)``, so the corpus is
 identical whether generated on the driver (test scale) or distributed via
