@@ -90,14 +90,14 @@ def reset_memo() -> None:
 
 
 def _sigsets(s: SparkSession, d: str) -> DataFrame:
-    """Fused (id, minhash, shingles) stage frame — the in-memory analog of
-    the pipeline's signature/shingle stage tables (SURVEY S4-S6), shared by
-    the minhash and jaccard derived views (r7).  ONE tokenize+md5 pass
-    instead of one per consumer; values bit-identical to the individual
-    operators (signatures.minhash_shingle_sets)."""
-    from webdedup.functions.signatures import minhash_shingle_sets
+    """(id, minhash, shingles) stage frame — the in-memory analog of the
+    pipeline's signature stage table (SURVEY S4-S6), shared by the minhash
+    and jaccard derived views (r7): ONE tokenize+md5 pass of the one
+    signature producer instead of one per consumer."""
+    from webdedup.functions.signatures import all_signatures
     return _memo(s, d, "sigsets",
-                 lambda: minhash_shingle_sets(_docs(s, d), CFG))
+                 lambda: all_signatures(_docs(s, d), CFG,
+                                        kinds=("minhash", "shingles")))
 
 
 def _mh_band_cands(s: SparkSession, d: str) -> DataFrame:
@@ -243,7 +243,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- simhash (SURVEY P6/P9/J1/J2) ---
     q["simhash64"] = lambda s, d: simhash_lsh.simhash_fingerprints(
-        _docs(s, d)).select(F.col("id").alias("doc_id"), "simhash")
+        _docs(s, d), cfg=CFG).select(F.col("id").alias("doc_id"), "simhash")
     q["simhash_pairs"] = lambda s, d: simhash_lsh.simhash_pairs(
         _docs(s, d), cfg=CFG)
     q["simhash_pairs_combo"] = _simhash_combo_pairs
@@ -373,7 +373,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- LSH index stats + median heuristic (SURVEY A6/A8) ---
     def _band_stats(s: SparkSession, d: str) -> DataFrame:
-        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d))
+        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d), cfg=CFG)
         bands = simhash_lsh.simhash_bands(sigs, CFG, scheme="single")
         buckets = bands.groupBy("table_id", "band_key").agg(
             F.count(F.lit(1)).alias("bsz"))
@@ -385,7 +385,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["simhash_band_stats"] = _band_stats
 
     def _median_heuristic(s: SparkSession, d: str) -> DataFrame:
-        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d))
+        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d), cfg=CFG)
         bands = simhash_lsh.simhash_bands(sigs, CFG, scheme="single")
         cands = simhash_lsh.band_candidates(bands)
         sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sig_a"))

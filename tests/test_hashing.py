@@ -153,3 +153,64 @@ def test_unicode_whitespace_udf_vs_catalyst(spark):
     jvm = df.select("doc_id", tokens_col(F.col("text")).alias("toks")).collect()
     for r in jvm:
         assert list(r["toks"]) == tokenize_py(UNICODE_WS_SAMPLES[r["doc_id"]])
+
+
+# Degenerate and ordinary docs for the signature producer: empty,
+# whitespace-only, one token, fewer than 5 tokens, between 5 and 16, and
+# longer than 16 tokens (repeated runs, so shingles and anchors repeat).
+SIG_TEXTS = [
+    "", "  \t\n ", "hello", "One two  three",
+    "the quick brown fox jumps over the lazy dog",
+    " ".join(f"w{i % 23}" for i in range(70)),
+    " ".join(["lorem ipsum dolor sit amet consectetur adipiscing elit sed "
+              "do eiusmod tempor incididunt ut labore et dolore magna"] * 3),
+]
+# every kinds subset a caller of all_signatures asks for
+CALLER_KINDS = [("simhash",), ("minhash",), ("shingles",), ("anchors",),
+                ("minhash", "shingles"),
+                ("simhash", "minhash", "shingles", "anchors")]
+
+
+@pytest.mark.parametrize("scheme", ["md5", "tokmix"])
+@pytest.mark.parametrize("kinds", CALLER_KINDS, ids="+".join)
+def test_all_signatures_kinds_are_projections(spark, kinds, scheme):
+    """Each kinds subset of the one signature producer equals the same
+    columns of its all-kinds output; under md5 the values equal the local
+    references and the Catalyst shingle sets."""
+    from dataclasses import replace
+
+    from webdedup.config import DEFAULT as CFG
+    from webdedup.functions.signatures import (
+        KINDS, _minhash_of_text, all_signatures,
+    )
+    from webdedup.operators.jaccard import shingle_sets
+
+    cfg = replace(CFG, hash_scheme=scheme)
+    docs = spark.createDataFrame(list(enumerate(SIG_TEXTS)),
+                                 "doc_id long, text string")
+
+    def rows(frame):
+        return {r["id"]: r.asDict() for r in frame.collect()}
+
+    full = rows(all_signatures(docs, cfg))
+    sub = all_signatures(docs, cfg, kinds=kinds)
+    assert sub.columns == ["id", *(k for k in KINDS if k in kinds)]
+    assert rows(sub) == {i: {c: r[c] for c in sub.columns}
+                         for i, r in full.items()}
+    assert any(r["anchors"] for r in full.values()), "vacuous anchors"
+    if scheme != "md5":
+        return
+    catalyst = {r["id"]: r["shingles"]
+                for r in shingle_sets(docs, cfg=CFG, use_udf=False).collect()}
+    K, mod = CFG.anchor_tokens, CFG.anchor_mod
+    for i, t in enumerate(SIG_TEXTS):
+        anchors = [h for h in map(hashing.h60_py,
+                                  shingles_py(tokenize_py(t), K))
+                   if h % mod == 0]
+        assert full[i] == {
+            "id": i,
+            "simhash": _simhash_of_text(t),
+            "minhash": _minhash_of_text(t, CFG),
+            "shingles": catalyst[i],
+            "anchors": list(dict.fromkeys(anchors)),
+        }, t

@@ -248,26 +248,6 @@ def test_ivf_cosine_recall(spark):
     assert full == exact_pairs
 
 
-def test_jaccard_verify_restrict_sets_equivalence(spark):
-    """restrict_sets=True/False must be result-identical (the flag is a
-    physical-plan choice: restricted single-scan vs corpus-wide sizes)."""
-    from webdedup.sources import corpus
-
-    docs = spark.createDataFrame(corpus.corpus_rows(CFG.seed + 7, 40),
-                                 schema=corpus.PAGE_KIND_SCHEMA)
-    docs = docs.select(F.xxhash64("url").alias("doc_id"), "text")
-    sets = jaccard.shingle_sets(docs, "doc_id", "text", CFG).localCheckpoint()
-    bands = minhash_lsh.minhash_bands(
-        minhash_lsh.minhash_signatures(docs, cfg=CFG).localCheckpoint(), CFG)
-    cands = simhash_lsh.band_candidates(bands)
-    base = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
-        cands, None, cfg=CFG, threshold=0.2, sets=sets).collect()}
-    restricted = {(r["a"], r["b"], r["jaccard"]) for r in jaccard.jaccard_verify(
-        cands, None, cfg=CFG, threshold=0.2, sets=sets,
-        restrict_sets=True).collect()}
-    assert base == restricted and base, "plan choice must not change results"
-
-
 def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
     """VERDICT r4 #4: collapse_identical pre-collapses identical-shingle-set
     docs before banding.  The fixture corpus plants exact duplicates (base/
@@ -317,7 +297,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
     for conf in (0.3, 0.95):
         got = _pairset(jaccard_verify(
             pairs.select("a", "b"), None, cfg=CFG, threshold=conf,
-            sets=sigs.select("id", "shingles"), restrict_sets=True))
+            sets=sigs.select("id", "shingles")))
         exp = exp_sim & oracle.jaccard_pairs(corpus_texts, conf, CFG)
         assert got == exp, (conf, len(got), len(exp))
     # non-vacuous: the high confirmation actually drops some true
@@ -331,7 +311,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
         None, cfg=CFG, sigs=sigs.select("id", "simhash"))
     conf_edges = _pairset(jaccard_verify(
         e.select("a", "b"), None, cfg=CFG, threshold=0.3,
-        sets=sigs.select("id", "shingles"), restrict_sets=True))
+        sets=sigs.select("id", "shingles")))
     full = exp_sim & oracle.jaccard_pairs(corpus_texts, 0.3, CFG)
     assert conf_edges <= full, "confirmed edge admits an unconfirmed pair"
 
@@ -402,7 +382,7 @@ def test_minhash_precomputed_cands_identical(spark):
     empty/whitespace docs (whose sentinel signatures band-collide in the raw
     frame but are anti-joined out; band collisions are pairwise, so no other
     pair is affected)."""
-    from webdedup.functions.signatures import minhash_shingle_sets
+    from webdedup.functions.signatures import all_signatures
 
     rows = [("e1", ""), ("e2", "   \n\t "),
             ("a1", "the quick brown fox jumps over the lazy dog again and "
@@ -412,7 +392,8 @@ def test_minhash_precomputed_cands_identical(spark):
             ("b1", "completely unrelated text about spark catalyst plans "
                    "and shuffle partitions in a distributed engine")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    fused = minhash_shingle_sets(docs, CFG).localCheckpoint()
+    fused = all_signatures(docs, CFG, kinds=("minhash", "shingles")
+                           ).localCheckpoint()
     sigs = fused.select("id", "minhash")
     sets = fused.select("id", "shingles")
     cands = simhash_lsh.band_candidates(

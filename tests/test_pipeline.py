@@ -221,3 +221,17 @@ def test_pipeline_simhash_confirm_modes_keep_recall(spark, pages):
             assert rep["eval/recall"] >= 0.99, (mode, rep["eval/recall"])
         finally:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_partition_guard_threshold(spark):
+    """ensure_min_partitions repartitions to ``n`` only when the frame has
+    fewer than ``below`` (default ``n``) partitions — the signature pass
+    guards with ``below`` = cores, so a frame already spread over the
+    cores (a guarded pipeline stage table) is not reshuffled."""
+    from webdedup.plans.partitions import ensure_min_partitions
+
+    df = spark.range(0, 100, numPartitions=3)
+    assert ensure_min_partitions(df, 6).rdd.getNumPartitions() == 6
+    assert ensure_min_partitions(df, 6, below=3) is df
+    assert ensure_min_partitions(df, 6, below=4).rdd.getNumPartitions() == 6
+    assert ensure_min_partitions(df, 2) is df

@@ -73,16 +73,18 @@ def test_extractor_determinism_contract(spark, name):
     assert a == local, "UDF path diverged from the local extractor"
 
 
+CLEAN = "the quick brown fox jumps over the lazy dog near the river bank"
+DIRTY = "the quick, brown fox; jumps over the lazy dog... near the river!"
+
+
 def test_alnum_tokenizer_changes_signatures_only_with_punctuation(spark):
     """tokenizer='alnum' strips punctuation before shingling: signatures
     are identical to the default for punctuation-free text and differ
     when punctuation glues tokens together."""
     from webdedup.functions.signatures import all_signatures
 
-    clean = "the quick brown fox jumps over the lazy dog near the river bank"
-    dirty = "the quick, brown fox; jumps over the lazy dog... near the river!"
     docs = spark.createDataFrame(
-        [("c", clean), ("d", dirty)], ["doc_id", "text"])
+        [("c", CLEAN), ("d", DIRTY)], ["doc_id", "text"])
     base = {r["id"]: r for r in all_signatures(docs, cfg=CFG).collect()}
     alnum = {r["id"]: r for r in all_signatures(
         docs, cfg=replace(CFG, tokenizer="alnum")).collect()}
@@ -95,6 +97,32 @@ def test_alnum_tokenizer_changes_signatures_only_with_punctuation(spark):
     est = lambda x, y: sum(a == b for a, b in zip(x, y)) / len(x)  # noqa: E731
     assert est(alnum["c"]["minhash"], alnum["d"]["minhash"]) > 0.5
     assert est(base["c"]["minhash"], base["d"]["minhash"]) < 0.5
+
+
+def test_simhash_matcher_follows_cfg_tokenizer(spark):
+    """The SimHash matcher tokenizes with ``cfg.tokenizer``, like the
+    pipeline's signature stage: under 'alnum' its fingerprints equal
+    ``all_signatures``' and the pair that only punctuation kept apart
+    (Hamming 8 with whitespace tokens, 3 with alnum) is found."""
+    from webdedup.functions.signatures import all_signatures
+    from webdedup.operators import simhash_lsh
+
+    docs = spark.createDataFrame(
+        [("c", CLEAN), ("d", DIRTY)], ["doc_id", "text"])
+    alnum = replace(CFG, tokenizer="alnum")
+
+    def fps(frame):
+        return {r["id"]: r["simhash"] for r in frame.collect()}
+
+    def pairs(frame):
+        return {(r["a"], r["b"]) for r in frame.collect()}
+
+    got = fps(simhash_lsh.simhash_fingerprints(docs, cfg=alnum))
+    assert got == fps(all_signatures(docs, cfg=alnum))
+    assert got != fps(simhash_lsh.simhash_fingerprints(docs, cfg=CFG))
+    assert pairs(simhash_lsh.simhash_pairs(docs, cfg=alnum)) == {("c", "d")}
+    assert pairs(simhash_lsh.simhash_pairs(docs, cfg=CFG)) == set()
+    assert pairs(simhash_lsh.simhash_edges(docs, cfg=alnum)) == {("c", "d")}
 
 
 def test_pipeline_runs_with_registered_nondefault_schemes(spark):

@@ -1,9 +1,19 @@
-"""Signature projections: text SimHash, vector SimHash, MinHash.
+"""Per-document signatures: text SimHash, MinHash, shingle sets, anchors,
+and vector SimHash.
 
-All are Arrow-batched pandas UDFs (``input_hint``: no per-row Python in the
-engine sense — each batch is processed with numpy vectorization; the only
-Python-level loop is over documents *within* an Arrow batch, with per-token
-work done by cached md5 and numpy bit arithmetic).
+``all_signatures(df, cfg, kinds=...)`` is the ONE producer of text
+signatures: a single ``mapInPandas`` pass that tokenizes each document once
+and computes only the requested kinds.  Every operator that needs a text
+signature (``simhash_fingerprints``, ``minhash_signatures``,
+``jaccard.shingle_sets``, ``substring.anchor_index``, the pipeline's
+``signatures`` stage, the entry's signature memo) is a projection of it.
+The other members of this module are the streaming column form
+``simhash64_udf`` (a projection that keeps a stream's other columns), the
+local references ``_simhash_of_text`` / ``_minhash_of_text`` that the
+brute-force oracle and tests compare against, and the vector SimHash UDF.
+
+Within an Arrow batch the only Python-level loop is over documents; per
+token work is cached md5 and numpy bit arithmetic.
 
 Reference semantics being reproduced:
 
@@ -56,15 +66,10 @@ def _simhash_of_tokens(toks: list[str], cache: dict | None = None) -> int:
         return 0
     if cache is None:
         cache = {}
-    h = np.empty(len(counts), dtype=np.uint64)
-    w = np.empty(len(counts), dtype=np.int64)
-    for j, (t, c) in enumerate(counts.items()):
-        v = cache.get(t)
-        if v is None:
-            a, b = hashing.h64_split_py(t)
-            v = (a << 32) | b
-            cache[t] = v
-        h[j], w[j] = v, c
+    _fill_token_hashes(counts, cache)
+    n = len(counts)
+    h = np.fromiter((cache[t] for t in counts), dtype=np.uint64, count=n)
+    w = np.fromiter(counts.values(), dtype=np.int64, count=n)
     bits = ((h[:, None] >> _BITPOS) & np.uint64(1)).astype(np.int64)
     votes = ((2 * bits - 1) * w[:, None]).sum(axis=0)    # per-bit signed vote
     fp = np.uint64(0)
@@ -74,8 +79,20 @@ def _simhash_of_tokens(toks: list[str], cache: dict | None = None) -> int:
     return hashing.to_signed64(int(fp))
 
 
+def _fill_token_hashes(toks, cache: dict) -> None:
+    """Add the 64-bit md5 hash of every token missing from ``cache``."""
+    for t in toks:
+        if t not in cache:
+            a, b = hashing.h64_split_py(t)
+            cache[t] = (a << 32) | b
+
+
 def simhash64_udf(tokenizer_name: str = "whitespace") -> Column:
-    """pandas UDF factory: text:string -> simhash:long."""
+    """pandas UDF factory: text:string -> simhash:long.
+
+    The column form of ``all_signatures(kinds=("simhash",))`` (same values),
+    for the streaming ``enrich_stream`` projection, which must keep the
+    stream's other columns."""
     from webdedup.functions.registry import get_tokenizer
 
     tok = get_tokenizer(tokenizer_name)
@@ -88,16 +105,12 @@ def simhash64_udf(tokenizer_name: str = "whitespace") -> Column:
     return _udf
 
 
-def simhash64_col(text: Column) -> Column:
-    return simhash64_udf()(text)
-
-
 def _minhash_of_text(text: str, cfg: DedupConfig = DEFAULT,
                      perms: tuple | None = None,
                      tokenizer=tokenize_py) -> list[int]:
-    """Local (driver-side) twin of ``minhash_udf`` — IDENTICAL values, used
-    by the brute-force oracle and tests.  ``perms`` lets a caller hoist the
-    coefficient generation out of a loop.
+    """Local (driver-side) twin of ``all_signatures``' ``minhash`` column —
+    IDENTICAL values, used by the brute-force oracle and tests.  ``perms``
+    lets a caller hoist the coefficient generation out of a loop.
 
     ``sig_i = min over shingles s of (a_i * h32(s) + b_i) mod (2^61-1)``;
     empty docs get the modulus (an impossible hash) at every position so
@@ -114,27 +127,6 @@ def _minhash_of_text(text: str, cfg: DedupConfig = DEFAULT,
     # values win every permutation, r5 fix)
     vals = hashing.perm_mod_p(a, b, hs)
     return [int(v) for v in vals.min(axis=1)]
-
-
-def minhash_udf(cfg: DedupConfig = DEFAULT) -> Column:
-    """pandas UDF factory: text:string -> minhash signature array<long>.
-
-    Value semantics in ``_minhash_of_text`` (shared with the local oracle).
-    """
-    from webdedup.functions.registry import get_tokenizer
-
-    perms = hashing.minhash_perms(cfg.minhash_perms, cfg.seed)
-    tok = get_tokenizer(cfg.tokenizer)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _minhash_of_text(t, cfg, perms, tok))
-
-    return _udf
-
-
-def minhash_col(text: Column, cfg: DedupConfig = DEFAULT) -> Column:
-    return minhash_udf(cfg)(text)
 
 
 def vector_simhash_udf(cfg: DedupConfig = DEFAULT) -> Column:
@@ -160,78 +152,8 @@ def vector_simhash_udf(cfg: DedupConfig = DEFAULT) -> Column:
     return _udf
 
 
-def minhash_shingle_sets(df, cfg: DedupConfig = DEFAULT,
-                         id_col: str = "doc_id", text_col: str = "text"):
-    """(id, minhash: array<long>, shingles: array<long>) in ONE
-    ``mapInPandas`` pass — the r7 fused twin of ``minhash_signatures`` +
-    ``jaccard.shingle_sets`` for the minhash-verify query path.
-
-    Separately, each of those operators tokenizes every document and runs
-    one md5 per 5-gram shingle — the measured floor of both.  Fused, the
-    tokenization runs once and ONE digest per distinct shingle serves both
-    hash widths (h32 = the 60-bit value >> 28, exactly the
-    ``all_signatures`` sharing trick), so the md5+tokenize work of the
-    second pass disappears.  Values are bit-identical to the individual
-    operators: the shingle list keeps first-occurrence order, duplicate
-    shingle strings are skipped BEFORE hashing (same value set — equal
-    strings hash equally), and empty docs carry the sentinel signature.
-    """
-    import hashlib
-
-    from pyspark.sql.types import (
-        ArrayType, LongType, StructField, StructType,
-    )
-
-    from webdedup.functions.registry import get_tokenizer
-
-    from webdedup.plans.partitions import ensure_min_partitions
-
-    id_field = df.schema[id_col]
-    out_schema = StructType([
-        StructField("id", id_field.dataType),
-        StructField("minhash", ArrayType(LongType())),
-        StructField("shingles", ArrayType(LongType())),
-    ])
-    # a small parquet scan arrives as 1-2 partitions, which would run the
-    # tokenize+md5 pass — the measured floor of this operator — on one
-    # core; re-expand only when under-partitioned (no-op at scale)
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    a, b = hashing.minhash_perms(cfg.minhash_perms, cfg.seed)
-    empty_sig = [int(hashing.MERSENNE61)] * cfg.minhash_perms
-    k = cfg.shingle_k
-    md5 = hashlib.md5
-    from_bytes = int.from_bytes
-    tokenizer = get_tokenizer(cfg.tokenizer)
-
-    def run(batches):
-        for batch in batches:
-            out = {"id": [], "minhash": [], "shingles": []}
-            for rid, text in zip(batch[id_col], batch[text_col]):
-                toks = tokenizer(text or "")
-                sh60: dict[int, None] = {}
-                h32s: dict[int, None] = {}
-                for g in shingles_py(toks, k):
-                    # first 60 digest bits == first 15 hex chars (r7:
-                    # byte parse, same value, ~25% cheaper)
-                    v = from_bytes(md5(g.encode()).digest()[:8], "big") >> 4
-                    sh60[v] = None
-                    h32s[v >> 28] = None
-                if h32s:
-                    hs = np.fromiter(h32s, dtype=np.uint64, count=len(h32s))
-                    vals = hashing.perm_mod_p(a, b, hs)
-                    minsig = [int(v) for v in vals.min(axis=1)]
-                else:
-                    minsig = empty_sig
-                out["id"].append(rid)
-                out["minhash"].append(minsig)
-                out["shingles"].append(list(sh60))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
-
-
 # ---------------------------------------------------------------------------
-# Fused signature pass (pipeline fast path)
+# The signature pass
 # ---------------------------------------------------------------------------
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)   # golden-ratio odd multiplier
@@ -255,33 +177,48 @@ def _window_mix(th: np.ndarray, k: int) -> np.ndarray:
     return S
 
 
+KINDS = ("simhash", "minhash", "shingles", "anchors")
+
+
 def all_signatures(df, cfg: DedupConfig = DEFAULT,
-                   id_col: str = "doc_id", text_col: str = "text"):
-    """One ``mapInPandas`` pass computing EVERY per-doc signature:
+                   id_col: str = "doc_id", text_col: str = "text",
+                   kinds: tuple[str, ...] = KINDS):
+    """The one producer of text signatures: ``id`` plus the requested
+    ``kinds`` (output in ``KINDS`` order) from ONE ``mapInPandas`` pass:
 
-        (id, simhash:long, minhash:array<long>, shingles:array<long>,
-         anchors:array<long>)
+        simhash:long, minhash:array<long>, shingles:array<long>,
+        anchors:array<long>
 
-    Fusing matters twice at scale: (1) tokenization runs once per document
-    instead of once per signature kind; (2) the 5-gram md5 digest is shared
-    between the 60-bit shingle hash (chars [0:15]) and the 32-bit MinHash
-    input (chars [0:8]) — md5 work for the two heaviest signals is halved.
-    And operationally it is ONE stage (one scan, one Python roundtrip, one
-    write) where the naive pipeline paid four stage floors.
+    Each document is tokenized once and only the requested kinds' work
+    runs: the SimHash vote for ``simhash``; the 5-gram digest loop for
+    ``minhash``/``shingles``, where one md5 per 5-gram serves both the
+    60-bit shingle hash and the 32-bit MinHash input (h32 = h60 >> 28);
+    the 16-gram anchor loop for ``anchors``.  Values equal the local
+    references (``_simhash_of_text``, ``_minhash_of_text``, the Catalyst
+    ``jaccard.shingle_sets(use_udf=False)``) under the default
+    ``cfg.hash_scheme='md5'``; a kinds subset equals the same columns of
+    the all-kinds output (pytest-pinned).  Shingle and anchor lists keep
+    first-occurrence order without duplicates; empty docs get simhash 0,
+    the sentinel MinHash signature (MERSENNE61 at every position) and
+    empty shingle/anchor lists.
 
-    Output values are bit-identical to the individual operators
-    (the oracle/equivalence tests compare them directly) — under the
-    default ``cfg.hash_scheme='md5'``.
+    The input is re-expanded when it has fewer partitions than cores: a
+    small parquet scan arrives as 1-2 partitions, which would run this
+    pass — the measured floor of every signature consumer — on 1-2 cores.
+    It then gets ``shuffle.partitions`` partitions, so the band-explode
+    guards downstream stay no-ops; an input already spread over the cores
+    (the pipeline's guarded stage tables, any input at scale) is left as
+    it is (``plans.partitions``).
 
     ``cfg.hash_scheme='tokmix'`` (production opt-in, VERDICT r3 #3): the
-    per-shingle md5 — the measured floor of this stage — is replaced by a
-    vectorized ``_window_mix`` over the per-token 64-bit hashes that the
-    SimHash pass already computed and cached.  md5 calls drop from
-    O(#shingles · shingle_chars) to O(#distinct tokens · token_chars);
-    shingle identity is preserved (equal token windows ⟹ equal hashes,
-    60-bit collision mass negligible), so dedup SEMANTICS are unchanged
-    while hash VALUES differ — no DuckDB twin, recall gate pytest-covered
-    (``test_pipeline_recall_tokmix``), measured in BENCH.md §tokmix.
+    per-shingle md5 is replaced by a vectorized ``_window_mix`` over the
+    per-token 64-bit hashes (the SimHash token hashes, cached per batch).
+    md5 calls drop from O(#shingles · shingle_chars) to O(#distinct
+    tokens · token_chars); shingle identity is preserved (equal token
+    windows ⟹ equal hashes, 60-bit collision mass negligible), so dedup
+    SEMANTICS are unchanged while hash VALUES differ — no DuckDB twin,
+    recall gate pytest-covered (``test_pipeline_recall_tokmix``), measured
+    in BENCH.md §tokmix.
     """
     import hashlib
     from collections.abc import Iterator
@@ -290,85 +227,90 @@ def all_signatures(df, cfg: DedupConfig = DEFAULT,
         ArrayType, LongType, StructField, StructType,
     )
 
-    id_field = df.schema[id_col]
-    out_schema = StructType([
-        StructField("id", id_field.dataType),
-        StructField("simhash", LongType()),
-        StructField("minhash", ArrayType(LongType())),
-        StructField("shingles", ArrayType(LongType())),
-        StructField("anchors", ArrayType(LongType())),
-    ])
+    from webdedup.functions.registry import get_tokenizer
+    from webdedup.plans.partitions import ensure_min_partitions
+
+    if not kinds or set(kinds) - set(KINDS):
+        raise ValueError(f"kinds must be a non-empty subset of {KINDS}: "
+                         f"{kinds!r}")
+    kinds = tuple(k for k in KINDS if k in kinds)
+    want_sim, want_mh, want_sh, want_an = (k in kinds for k in KINDS)
+    out_schema = StructType(
+        [StructField("id", df.schema[id_col].dataType)]
+        + [StructField(k, LongType() if k == "simhash"
+                       else ArrayType(LongType())) for k in kinds])
 
     a, b = hashing.minhash_perms(cfg.minhash_perms, cfg.seed)
-    p = np.uint64(hashing.MERSENNE61)
-    empty_sig = [int(p)] * cfg.minhash_perms
+    empty_sig = [int(hashing.MERSENNE61)] * cfg.minhash_perms
     K, mod, k = cfg.anchor_tokens, cfg.anchor_mod, cfg.shingle_k
-    scheme = cfg.hash_scheme
+    tokmix = cfg.hash_scheme == "tokmix"
     md5 = hashlib.md5
     from_bytes = int.from_bytes
-
-    from webdedup.functions.registry import get_tokenizer
-
     tokenizer = get_tokenizer(cfg.tokenizer)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from webdedup.functions.tokenize import shingles_py
+    def minsig(h32: np.ndarray) -> list[int]:
+        if not h32.size:
+            return empty_sig
+        return hashing.perm_mod_p(a, b, h32).min(axis=1).tolist()
 
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             tok_cache: dict = {}
-            out = {"id": [], "simhash": [], "minhash": [],
-                   "shingles": [], "anchors": []}
+            out: dict[str, list] = {c: [] for c in ("id", *kinds)}
             for rid, text in zip(batch[id_col], batch[text_col]):
                 toks = tokenizer(text or "")  # registry scheme; default =
                 # the Java-\s-equivalent whitespace split (oracle-checked)
-                # --- simhash (token-level, batch-scoped hash cache) ---
-                sh = _simhash_of_tokens(toks, tok_cache) if toks else 0
-                if scheme == "tokmix" and toks:
-                    # per-token hashes are already in the simhash cache;
-                    # window mixes replace every per-shingle md5
+                out["id"].append(rid)
+                if want_sim:
+                    out["simhash"].append(_simhash_of_tokens(toks, tok_cache))
+                if tokmix:
+                    # window mixes over the cached per-token hashes replace
+                    # every per-shingle / per-anchor md5
+                    if not want_sim:
+                        _fill_token_hashes(toks, tok_cache)
                     th = np.fromiter((tok_cache[t] for t in toks),
                                      dtype=np.uint64, count=len(toks))
-                    s5 = _window_mix(th, k)
-                    sh60_arr = np.unique(s5 >> np.uint64(4))   # 60-bit ids
-                    h32_arr = np.unique(s5 >> np.uint64(32))   # minhash input
-                    vals = hashing.perm_mod_p(a, b, h32_arr)
-                    minsig = [int(v) for v in vals.min(axis=1)]
-                    a60 = _window_mix(th, K) >> np.uint64(4)
-                    anch_list = [int(v) for v in np.unique(
-                        a60[a60 % np.uint64(mod) == 0])]
-                    out["id"].append(rid)
-                    out["simhash"].append(sh)
-                    out["minhash"].append(minsig)
-                    out["shingles"].append([int(v) for v in sh60_arr])
-                    out["anchors"].append(anch_list)
-                    continue
-                # --- md5 scheme: shingles + minhash from ONE digest per
-                # 5-gram: h32 = first 8 hex chars = (60-bit value) >> 28,
-                # so one int-parse serves both hash widths ---
-                sh60: dict[int, None] = {}
-                h32s: dict[int, None] = {}
-                for g in shingles_py(toks, k):
-                    # 60 digest bits == 15 hex chars (r7 byte parse)
-                    v = from_bytes(md5(g.encode()).digest()[:8], "big") >> 4
-                    sh60[v] = None
-                    h32s[v >> 28] = None
-                if h32s:
-                    hs = np.fromiter(h32s, dtype=np.uint64, count=len(h32s))
-                    vals = hashing.perm_mod_p(a, b, hs)
-                    minsig = [int(v) for v in vals.min(axis=1)]
+                    if want_mh or want_sh:
+                        s5 = _window_mix(th, k)
+                        sh60 = np.unique(s5 >> np.uint64(4)).tolist()
+                        h32 = np.unique(s5 >> np.uint64(32))
+                    if want_an:
+                        a60 = _window_mix(th, K) >> np.uint64(4)
+                        anch = np.unique(
+                            a60[a60 % np.uint64(mod) == 0]).tolist()
                 else:
-                    minsig = empty_sig
-                # --- anchors (16-gram winnowing sample) ---
-                anch: dict[int, None] = {}
-                for g in shingles_py(toks, K):
-                    h = from_bytes(md5(g.encode()).digest()[:8], "big") >> 4
-                    if h % mod == 0:
-                        anch[h] = None
-                out["id"].append(rid)
-                out["simhash"].append(sh)
-                out["minhash"].append(minsig)
-                out["shingles"].append(list(sh60))
-                out["anchors"].append(list(anch))
+                    if want_mh or want_sh:
+                        sh60d: dict[int, None] = {}
+                        h32d: dict[int, None] = {}
+                        for g in shingles_py(toks, k):
+                            # first 60 digest bits == first 15 hex chars
+                            # (r7 byte parse, same value as hashing.h60_py)
+                            v = from_bytes(md5(g.encode()).digest()[:8],
+                                           "big") >> 4
+                            if want_sh:
+                                sh60d[v] = None
+                            if want_mh:
+                                h32d[v >> 28] = None
+                        sh60 = list(sh60d)
+                        h32 = np.fromiter(h32d, dtype=np.uint64,
+                                          count=len(h32d))
+                    if want_an:  # 16-gram winnowing sample
+                        anchd: dict[int, None] = {}
+                        for g in shingles_py(toks, K):
+                            h = from_bytes(md5(g.encode()).digest()[:8],
+                                           "big") >> 4
+                            if h % mod == 0:
+                                anchd[h] = None
+                        anch = list(anchd)
+                if want_mh:
+                    out["minhash"].append(minsig(h32))
+                if want_sh:
+                    out["shingles"].append(sh60)
+                if want_an:
+                    out["anchors"].append(anch)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    df = ensure_min_partitions(
+        df.select(id_col, text_col),
+        below=df.sparkSession.sparkContext.defaultParallelism)
+    return df.mapInPandas(run, schema=out_schema)

@@ -9,7 +9,7 @@ set Jaccard over 5-gram shingles (SURVEY §2.2 P11):
 computed two ways:
 
 - ``jaccard_verify``    — for an existing candidate-pair frame: join shingle
-  *sets* to both sides and evaluate with ``array_intersect``/``array_union``.
+  *sets* to both sides and count |A n B| with a vectorized numpy kernel.
 - ``jaccard_all_pairs`` — exact all-pairs via the inverted-index pattern:
   explode distinct (doc, shingle-hash), self-join on shingle-hash, count
   co-occurrences = |A n B|, then J = inter / (|A|+|B|-inter).  Any pair with
@@ -21,17 +21,14 @@ computed two ways:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import numpy as np
-import pandas as pd
-from pyspark.sql.types import ArrayType, LongType
-
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.hashing import h60_py
-from webdedup.functions.tokenize import shingles_py, tokenize_py
 from webdedup.functions.hashing import h60_col
+from webdedup.functions.signatures import all_signatures
 from webdedup.functions.tokenize import shingles_col, tokens_col
 
 
@@ -42,40 +39,24 @@ def shingle_sets(df: DataFrame, id_col: str = "doc_id",
     """(id, shingles: array<long>) — distinct 60-bit shingle hashes.
 
     Two equivalent implementations (bit-identical output):
-    - Arrow pandas UDF (default) — ~10x faster than Catalyst here because
-      ``conv(substr(md5(...)))`` per shingle is an interpreted
+    - the ``shingles`` projection of the one signature pass
+      (``all_signatures``, default) — ~10x faster than Catalyst here
+      because ``conv(substr(md5(...)))`` per shingle is an interpreted
       arbitrary-base conversion;
     - pure Catalyst expression (``use_udf=False``) — kept as the reference
-      implementation the oracle tests compare against.
+      implementation the tests compare against (default tokenizer only).
     """
-    if not use_udf:
-        return df.select(
-            F.col(id_col).alias("id"),
-            F.array_distinct(
-                F.transform(
-                    shingles_col(tokens_col(F.col(text_col)), cfg.shingle_k),
-                    h60_col,
-                )
-            ).alias("shingles"),
-        )
-
-    from webdedup.functions.registry import get_tokenizer
-
-    k = cfg.shingle_k
-    tok = get_tokenizer(cfg.tokenizer)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        def sh(text: str) -> list[int]:
-            seen: dict[int, None] = {}
-            for s in shingles_py(tok(text or ""), k):
-                seen[h60_py(s)] = None
-            return list(seen)  # first-occurrence order, duplicates dropped
-
-        return texts.map(sh)
-
-    return df.select(F.col(id_col).alias("id"),
-                     _udf(F.col(text_col)).alias("shingles"))
+    if use_udf:
+        return all_signatures(df, cfg, id_col, text_col, kinds=("shingles",))
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(
+            F.transform(
+                shingles_col(tokens_col(F.col(text_col)), cfg.shingle_k),
+                h60_col,
+            )
+        ).alias("shingles"),
+    )
 
 
 def shingle_index(df: DataFrame, id_col: str = "doc_id",
@@ -162,10 +143,7 @@ def jaccard_all_pairs(df: DataFrame, id_col: str = "doc_id",
 def jaccard_verify(cands: DataFrame, df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", cfg: DedupConfig = DEFAULT,
                    threshold: float | None = None,
-                   sets: DataFrame | None = None,
-                   exploded: bool = True,
-                   restrict_sets: bool = False,
-                   pair_kernel: bool = True) -> DataFrame:
+                   sets: DataFrame | None = None) -> DataFrame:
     """Verify candidate (a, b) pairs with exact shingle-set Jaccard.
 
     The join back to the corpus is the reference's candidate-verification
@@ -173,119 +151,37 @@ def jaccard_verify(cands: DataFrame, df: DataFrame, id_col: str = "doc_id",
     Pass a materialized ``sets`` (from ``shingle_sets``) to avoid recomputing
     shingles inside a multi-join plan.
 
-    ``pair_kernel=True`` (default since r6 — the 1M-doc edges_minhash
-    whale): join each side's shingle ARRAY to the pair once (two shuffle
-    joins moving ~0.5 KB/row — half the bytes of the exploded index rows
-    for the same pair) and compute |A∩B| with a vectorized-batch numpy
-    kernel — no 60x pair-row explosion, no giant groupBy.  Values are
-    bit-identical (same integer intersection/union, same float64
-    division); the jaccard/minhash oracle rows pin it.  This is NOT the
-    r3-rejected wide-array BROADCAST plan (per-task broadcast
-    deserialization GC): both sides arrive by shuffle join, sized by the
-    candidate list.  Set False to fall back to the exploded-index plan
-    below.  ``restrict_sets`` is accepted but SUBSUMED in this branch
-    (r6 ADVICE): the two inner joins against the candidate frame ARE the
-    restriction — only candidate ids' shingle arrays ever move — so no
-    separate semi-join pass exists or is needed; the flag changes the
-    physical plan only under ``pair_kernel=False``.
-
-    ``exploded=True`` computes |A n B| with narrow-row equi-joins
-    over the exploded shingle index instead of joining the wide array column
-    to both pair sides.  The array form broadcasts/shuffles ~KB-wide rows
-    and at bench scale showed a 10x slowdown from broadcast deserialization
-    GC; the exploded form moves only (id, sh) longs.  At the r6 1M-doc
-    scale the quadratic uncertainty-band candidate volume made its
-    pair-row explosion (~60 rows per pair side) + groupBy the single
-    largest cost in the pipeline — hence the pair kernel above.
-
-    ``restrict_sets=True`` semi-joins ``sets`` to the candidate ids ONCE
-    into a checkpointed small frame and derives both the exploded index and
-    the per-id sizes from it.  Turn it on when the candidates cover a
-    small fraction of the corpus — the fast-accept uncertainty band (~5%
-    of candidates at 250k docs: verify 34.5s -> 13.1s, one restricted scan
-    instead of two corpus-wide ones).  Leave it off (default) when
-    candidate ids span most of the corpus (e.g. exact-verify of ALL banded
-    candidates), where the checkpoint barrier + extra semi-join only add
-    fixed latency.  Results are identical either way (the sizes frame is
-    consumed through inner joins on candidate ids)."""
+    Plan (r6 — the 1M-doc edges_minhash whale): join each side's shingle
+    ARRAY to the pair once (two shuffle joins, sized by the candidate list,
+    so only candidate ids' arrays ever move) and compute |A∩B| with a
+    vectorized-batch numpy kernel — no per-shingle pair-row explosion, no
+    giant groupBy.  Empty-vs-empty pairs score 0.0 (0/0).  This is NOT
+    the r3-rejected wide-array BROADCAST plan (per-task broadcast
+    deserialization GC): both sides arrive by shuffle join.  The
+    jaccard/minhash oracle rows and ``oracle.jaccard_pairs`` pin the
+    values."""
     t = cfg.jaccard_threshold if threshold is None else threshold
     if sets is None:
         sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
             eager=False)
-    if pair_kernel:
-        sa = sets.select(F.col("id").alias("a"),
-                         F.col("shingles").alias("sh_a"))
-        sb = sets.select(F.col("id").alias("b"),
-                         F.col("shingles").alias("sh_b"))
+    sa = sets.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
+    sb = sets.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b"))
 
-        @F.pandas_udf("double")
-        def _jac(xa: pd.Series, xb: pd.Series) -> pd.Series:
-            if len(xa) == 0:  # scalar pandas UDFs can get empty batches
-                return pd.Series([], dtype="float64")
-            out = np.empty(len(xa), dtype="float64")
-            for i, (u, v) in enumerate(zip(xa.to_numpy(), xb.to_numpy())):
-                nu, nv = len(u), len(v)
-                if nu == 0 and nv == 0:
-                    out[i] = 0.0  # 0/0 -> 0.0, the exploded-plan semantics
-                    continue
-                inter = np.intersect1d(u, v, assume_unique=True).size
-                out[i] = inter / (nu + nv - inter)
-            return pd.Series(out)
+    @F.pandas_udf("double")
+    def _jac(xa: pd.Series, xb: pd.Series) -> pd.Series:
+        if len(xa) == 0:  # scalar pandas UDFs can get empty batches
+            return pd.Series([], dtype="float64")
+        out = np.empty(len(xa), dtype="float64")
+        for i, (u, v) in enumerate(zip(xa.to_numpy(), xb.to_numpy())):
+            nu, nv = len(u), len(v)
+            if nu == 0 and nv == 0:
+                out[i] = 0.0  # 0/0 -> 0.0
+                continue
+            inter = np.intersect1d(u, v, assume_unique=True).size
+            out[i] = inter / (nu + nv - inter)
+        return pd.Series(out)
 
-        return (cands.select("a", "b").join(sa, "a").join(sb, "b")
-                .withColumn("jaccard", _jac(F.col("sh_a"), F.col("sh_b")))
-                .filter(F.col("jaccard") >= t)
-                .select("a", "b", "jaccard"))
-    if not exploded:
-        sa = sets.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
-        sb = sets.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        return (
-            cands.join(sa, "a").join(sb, "b")
-            .withColumn("jaccard",
-                        F.when(union > 0, inter / union).otherwise(F.lit(0.0)))
+    return (cands.select("a", "b").join(sa, "a").join(sb, "b")
+            .withColumn("jaccard", _jac(F.col("sh_a"), F.col("sh_b")))
             .filter(F.col("jaccard") >= t)
-            .select("a", "b", "jaccard")
-        )
-
-    cand_ids = (cands.select(F.col("a").alias("id"))
-                .unionByName(cands.select(F.col("b").alias("id"))).distinct())
-    if restrict_sets:
-        # ONE scan of the (wide) shingle table, restricted to ids that
-        # appear in a candidate pair, checkpointed so sizes + index both
-        # read the small restricted frame instead of re-scanning the full
-        # corpus table (see docstring).
-        from webdedup.plans.partitions import ensure_min_partitions
-        small = (sets.join(cand_ids, "id", "left_semi")
-                 .select("id", "shingles").localCheckpoint(eager=False))
-        sizes = small.select("id", F.size("shingles").alias("sz"))
-        # explode fan-out guard: AQE may have coalesced the semi-joined
-        # frame to 1-2 partitions (see plans.partitions)
-        idx = (ensure_min_partitions(small)
-               .select("id", F.explode("shingles").alias("sh")))
-    else:
-        sizes = sets.select("id", F.size("shingles").alias("sz"))
-        idx = (sets.join(cand_ids, "id", "left_semi")
-               .select("id", F.explode("shingles").alias("sh")))
-    a_sh = cands.join(idx.withColumnRenamed("id", "a"), "a")  # (a, b, sh)
-    inter = (
-        a_sh.join(idx.select(F.col("id").alias("b"), "sh"), ["b", "sh"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        cands.join(inter, ["a", "b"], "left")
-        .join(sizes.select(F.col("id").alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("sz").alias("sz_b")), "b")
-        .withColumn("inter", F.coalesce("inter", F.lit(0)))
-        .withColumn(
-            "union_sz", F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        .withColumn(
-            "jaccard",
-            F.when(F.col("union_sz") > 0,
-                   F.col("inter") / F.col("union_sz")).otherwise(F.lit(0.0)))
-        .filter(F.col("jaccard") >= t)
-        .select("a", "b", "jaccard")
-    )
-    return out
+            .select("a", "b", "jaccard"))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.signatures import minhash_col
+from webdedup.functions.signatures import all_signatures
 from webdedup.operators.jaccard import jaccard_verify
 from webdedup.operators.simhash_lsh import band_candidates
 
@@ -30,15 +30,9 @@ from webdedup.operators.simhash_lsh import band_candidates
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        cfg: DedupConfig = DEFAULT) -> DataFrame:
-    """(id, minhash: array<long>[128]) — one Arrow-batched UDF projection.
-
-    Input re-expanded when under-partitioned (r7), so the per-shingle md5
-    pass — this operator's floor — parallelizes even when the source scan
-    arrives as 1-2 partitions; a no-op at scale (plans.partitions)."""
-    from webdedup.plans.partitions import ensure_min_partitions
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    return df.select(F.col(id_col).alias("id"),
-                     minhash_col(F.col(text_col), cfg).alias("minhash"))
+    """(id, minhash: array<long>[128]) — the ``minhash`` projection of the
+    one signature pass (``all_signatures``)."""
+    return all_signatures(df, cfg, id_col, text_col, kinds=("minhash",))
 
 
 def minhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
@@ -115,22 +109,22 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     AQE skew-join splits a residual hot band bucket at runtime.
 
     ``est_prefilter``: optional signature-estimate Jaccard cutoff applied
-    BEFORE the exact exploded-shingle verify — the reference's re-rank
-    metric (``minhash_search.py:81-83``) as a cheap Catalyst zip_with over
-    the already-loaded signatures.  The estimator is unbiased with
+    BEFORE the exact shingle verify — the reference's re-rank
+    metric (``minhash_search.py:81-83``, ``signature_jaccard``) over the
+    already-loaded signatures.  The estimator is unbiased with
     std ≈ sqrt(J(1-J)/128) ≈ 0.04, so a cutoff 3σ under the verify
     threshold (e.g. 0.35 for threshold 0.5) discards the bulk of the
     false-candidate mass without touching real pairs; the pipeline's golden
     recall gate (>= 0.99) pytest-covers the safety margin.
 
     ``fast_accept``: optional signature-estimate cutoff ABOVE which a
-    candidate pair is accepted without the exact exploded-shingle verify —
+    candidate pair is accepted without the exact shingle verify —
     the stratified-verify mode for the pipeline's edge sets.  The estimator
     is unbiased with std sqrt(J(1-J)/perms) (~0.044 at J=0.5 with 128
     perms), so a cutoff 3σ above the verify threshold accepts only pairs
     whose true Jaccard is below threshold with probability <~0.1% each;
     only the uncertainty band [est_prefilter, fast_accept) pays the exact
-    verify, which is where the exploded-join volume goes at scale.
+    verify, which is where the verify volume goes at scale.
     When set, the output gains an ``estimated`` boolean column: accepted
     rows carry the (unbiased, ±1/128-quantized) ESTIMATE in the ``jaccard``
     column and ``estimated=true``; verified rows carry the exact value and
@@ -141,8 +135,9 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     oracle-checked ``minhash_lsh_pairs`` query never sets it.
 
     ``sigs``/``sets``: optional materialized signature / shingle-set tables
-    (stage tables in the pipeline) — without them the whole signature UDF
-    subtree is embedded in a self-join plan and executes once per join arm.
+    (stage tables in the pipeline).  Whichever is missing comes from ONE
+    ``all_signatures`` pass over ``df``, lazily checkpointed so it does not
+    execute once per join arm.
 
     ``cands``: optional PRECOMPUTED banded candidate frame (a, b) built over
     the RAW signature table — ``band_candidates(minhash_bands(sigs))``,
@@ -176,22 +171,19 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     NULL and is dropped.
     """
     t = cfg.minhash_threshold if threshold is None else threshold
-    if sigs is None and sets is None and df is not None:
-        # r7: neither stage table supplied — ONE fused pass computes both
-        # (tokenization once, one md5 per distinct shingle serving both
-        # hash widths) instead of two full tokenize+md5 passes; values are
-        # bit-identical to the separate operators (signatures doc)
-        from webdedup.functions.signatures import minhash_shingle_sets
-        fused = minhash_shingle_sets(df, cfg, id_col, text_col)
-        fused = fused.localCheckpoint(eager=False)
-        sigs = fused.select("id", "minhash")
-        sets = fused.select("id", "shingles")
-    elif sigs is None:
-        # lazy checkpoint: signature UDF would otherwise run once per join arm
-        sigs = minhash_signatures(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)
+    missing = tuple(kind for kind, frame in (("minhash", sigs),
+                                             ("shingles", sets))
+                    if frame is None)
+    if missing:
+        # ONE signature pass computes whichever of the two stage frames was
+        # not supplied; lazy checkpoint: the pass would otherwise run once
+        # per join arm
+        fused = all_signatures(df, cfg, id_col, text_col, kinds=missing
+                               ).localCheckpoint(eager=False)
+        sigs = fused.select("id", "minhash") if sigs is None else sigs
+        sets = fused.select("id", "shingles") if sets is None else sets
     # Empty-shingle-set docs carry the sentinel signature (MERSENNE61 at
-    # every position — signatures.minhash_udf).  They can never survive the
+    # every position — signatures.all_signatures).  They can never survive the
     # exact verify (empty vs anything is J = 0 or 0/0 -> NULL, both dropped),
     # but in fast-accept mode two empty docs band together and would be
     # accepted at est 1.0 WITHOUT verification — while the collapsed path's
@@ -236,10 +228,8 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                                 F.lit(True).alias("estimated")))
             uncertain = (est.filter(F.col("est_jaccard") < fast_accept)
                          .select("a", "b"))
-            # the uncertainty band covers a small fraction of the corpus:
-            # restrict the shingle scan to its ids (jaccard_verify doc)
             verified = jaccard_verify(uncertain, df, id_col, text_col, cfg,
-                                      t, sets=sets, restrict_sets=True
+                                      t, sets=sets
                                       ).withColumn("estimated", F.lit(False))
             return verified.unionByName(accepted)
         cands = est.select("a", "b")
@@ -248,7 +238,7 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
 
 def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
                              text_col: str, cfg: DedupConfig, t: float,
-                             sigs: DataFrame, sets: DataFrame | None,
+                             sigs: DataFrame, sets: DataFrame,
                              est_prefilter: float | None,
                              fast_accept: float | None,
                              ) -> DataFrame:
@@ -262,11 +252,6 @@ def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
     """
     from pyspark.sql import Window
 
-    from webdedup.operators.jaccard import shingle_sets
-
-    if sets is None:
-        sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)
     srt = F.array_sort("shingles")
     w_cls = Window.partitionBy("_k1", "_k2")
     members = (

@@ -40,21 +40,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.signatures import simhash64_col
+from webdedup.functions.signatures import all_signatures
 from webdedup.operators.bucket_scan import bucket_scan
 
 
 def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """(id, simhash:long) — one Arrow-batched UDF projection.
-
-    The input is re-expanded when under-partitioned (r7): a small parquet
-    scan arrives as 1-2 partitions, which would run the tokenize+hash UDF
-    on 1-2 cores; at scale the guard is a no-op (plans.partitions)."""
-    from webdedup.plans.partitions import ensure_min_partitions
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    return df.select(F.col(id_col).alias("id"),
-                     simhash64_col(F.col(text_col)).alias("simhash"))
+                         text_col: str = "text",
+                         cfg: DedupConfig = DEFAULT) -> DataFrame:
+    """(id, simhash:long) — the ``simhash`` projection of the one signature
+    pass (``all_signatures``), tokenized by ``cfg.tokenizer``."""
+    return all_signatures(df, cfg, id_col, text_col, kinds=("simhash",))
 
 
 def _block(sig, i: int, width: int):
@@ -210,7 +205,8 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     join ever materializes.  The signature frame is lazily
     localCheckpoint-ed: the band explode would otherwise re-run the Arrow
     UDF under AQE re-planning."""
-    sigs = simhash_fingerprints(df, id_col, text_col).localCheckpoint(eager=False)
+    sigs = simhash_fingerprints(df, id_col, text_col, cfg).localCheckpoint(
+        eager=False)
     return blocked_hamming_pairs(simhash_bands(sigs, cfg, scheme),
                                  cfg.hamming_threshold)
 
@@ -233,7 +229,7 @@ def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     """
     if sigs is None:
         # lazy checkpoint: keep the UDF out of the multi-arm join plan
-        sigs = simhash_fingerprints(df, id_col, text_col).localCheckpoint(
+        sigs = simhash_fingerprints(df, id_col, text_col, cfg).localCheckpoint(
             eager=False)
     w = Window.partitionBy("simhash")
     tagged = sigs.withColumn("rep", F.min("id").over(w))

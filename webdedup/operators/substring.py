@@ -17,9 +17,10 @@ semantics; the scalable equivalent is **content-defined anchor sampling**
    shared-anchor count (expected one anchor per ``anchor_mod`` positions, so
    ``n_shared >= 2`` evidences a run of ~>= 2*mod+K tokens).
 
-Everything is native Catalyst (sequence/transform/slice + md5 hashing +
-equi-join) — no UDF — and DuckDB-expressible, so this operator is
-oracle-checked exactly.
+The sampled fingerprints are the ``anchors`` kind of the one signature
+pass (``functions.signatures.all_signatures``); the pair search is a native
+Catalyst equi-join + count.  The DuckDB twin ``oracle_sql.substring_pairs``
+recomputes the anchors in SQL, so this operator is oracle-checked exactly.
 """
 
 from __future__ import annotations
@@ -27,62 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import pandas as pd
-from pyspark.sql.types import ArrayType, LongType
-
 from webdedup.config import DedupConfig, DEFAULT
-from webdedup.functions.hashing import h60_py
-from webdedup.functions.tokenize import shingles_py, tokenize_py
-from webdedup.functions.hashing import h60_col
-from webdedup.functions.tokenize import shingles_col, tokens_col
+from webdedup.functions.signatures import all_signatures
 
 
 def anchor_index(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text",
-                 cfg: DedupConfig = DEFAULT,
-                 use_udf: bool = True) -> DataFrame:
-    """(id, anchor) — distinct sampled k-gram fingerprints per doc.
-
-    UDF and Catalyst implementations produce bit-identical anchors (both
-    md5-derived); the UDF is the fast path (see jaccard.shingle_sets)."""
-    if not use_udf:
-        grams = shingles_col(tokens_col(F.col(text_col)), cfg.anchor_tokens)
-        hashes = F.transform(grams, h60_col)
-        sampled = F.array_distinct(
-            F.filter(hashes, lambda h: h % cfg.anchor_mod == 0)
-        )
-        return (
-            df.select(F.col(id_col).alias("id"), sampled.alias("anchors"))
-            .select("id", F.explode("anchors").alias("anchor"))
-        )
-
-    from webdedup.functions.registry import get_tokenizer
-    from webdedup.plans.partitions import ensure_min_partitions
-
-    # the per-16-gram md5 pass is this operator's floor; a small parquet
-    # scan arrives as 1-2 partitions and would run it on 1-2 cores (r7;
-    # no-op at scale — see plans.partitions)
-    df = ensure_min_partitions(df.select(id_col, text_col))
-    K, mod = cfg.anchor_tokens, cfg.anchor_mod
-    tok = get_tokenizer(cfg.tokenizer)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        def anchors(text: str) -> list[int]:
-            seen: dict[int, None] = {}
-            for g in shingles_py(tok(text or ""), K):
-                h = h60_py(g)
-                if h % mod == 0:
-                    seen[h] = None
-            return list(seen)
-
-        return texts.map(anchors)
-
-    return (
-        df.select(F.col(id_col).alias("id"),
-                  _udf(F.col(text_col)).alias("anchors"))
-        .select("id", F.explode("anchors").alias("anchor"))
-    )
+                 cfg: DedupConfig = DEFAULT) -> DataFrame:
+    """(id, anchor) — distinct sampled k-gram fingerprints per doc."""
+    return (all_signatures(df, cfg, id_col, text_col, kinds=("anchors",))
+            .select("id", F.explode("anchors").alias("anchor")))
 
 
 def substring_pairs(df: DataFrame, id_col: str = "doc_id",

@@ -25,8 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Repartition ``df`` to ``n`` partitions iff it currently has fewer.
+def ensure_min_partitions(df: DataFrame, n: int | None = None,
+                          below: int | None = None) -> DataFrame:
+    """Repartition ``df`` to ``n`` partitions iff it currently has fewer
+    than ``below`` (default ``n``).
 
     ``n`` defaults to ``spark.sql.shuffle.partitions``.  The current count
     comes from the ``spark.webdedup.inputPartitions`` static hint when set,
@@ -37,4 +39,4 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
         n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     hint = spark.conf.get("spark.webdedup.inputPartitions", None)
     cur = int(hint) if hint else df.rdd.getNumPartitions()
-    return df.repartition(n) if cur < n else df
+    return df.repartition(n) if cur < (n if below is None else below) else df

@@ -64,7 +64,7 @@ def run(
     bit-identical to the brute-force matcher union (what
     ``tools/verify_drive.py`` asserts).  OPT-IN ``'auto'`` accepts MinHash
     candidates whose signature-estimate Jaccard is >= threshold + 3σ
-    without the exact exploded verify (measured: ~95% of candidates on the
+    without the exact verify (measured: ~95% of candidates on the
     near-dup corpus, verify stage 22.5s -> 7.6s at 4 cores); recall is
     unaffected (the gate stays pytest-covered), precision admits ~3σ-tail
     near-threshold pairs, and the edge frame's ``jaccard`` column then
@@ -102,7 +102,7 @@ def run(
     >3σ from a 0.3 cutoff — deterministic per corpus, near-free, and the
     right default at 10^12 docs where the exact confirm would re-shuffle
     every edge endpoint's shingle set.  ``'exact'`` confirms with exact
-    exploded-shingle Jaccard instead (measured +60 s at 250k/4 cores —
+    shingle-set Jaccard instead (measured +60 s at 250k/4 cores —
     the shingle join over every edge endpoint).  Borderline pairs within
     ±3σ of the cutoff can flip between modes (the pytest contract pins
     the two modes' agreement outside that band).
@@ -178,8 +178,7 @@ def run(
                     e = jaccard_verify(
                         e.select("a", "b"), None, cfg=cfg,
                         threshold=simhash_confirm_jaccard,
-                        sets=sigs.select("id", "shingles"),
-                        restrict_sets=True)
+                        sets=sigs.select("id", "shingles"))
                 elif simhash_confirm_mode == "est":
                     # empty-token docs carry the sentinel signature and
                     # would est-score 1.0 against each other (r6 ADVICE:
@@ -212,7 +211,7 @@ def run(
             #   a true >=t pair is a 3σ event, recall gate pytest-covered)
             # - est >= t+3σ       -> accepted without exact verify (false
             #   accept is a 3σ event; deterministic per corpus)
-            # - otherwise         -> exact exploded-shingle verify, now paid
+            # - otherwise         -> exact shingle verify, now paid
             #   only by the uncertainty band instead of every candidate
             sigma = (cfg.jaccard_threshold
                      * (1 - cfg.jaccard_threshold) / cfg.minhash_perms) ** 0.5
