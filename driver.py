@@ -13,7 +13,11 @@ Local smoke:
         --work-dir /tmp/webdedup_run --cores 8
 
 The config surface mirrors the reference CLI (``run_pipeline.py:224-297``):
-method selection -> --matchers; thresholds/bits/tables/seed -> DedupConfig.
+method selection -> --matchers; thresholds/seed -> DedupConfig; the SimHash
+precision dial -> --simhash-confirm-jaccard.  How a matcher finds its
+candidates is not a setting: SimHash always bands with the 56 block
+combinations and confirms with the signature-estimate Jaccard (see
+``plans.pipeline.run``).
 """
 
 from __future__ import annotations
@@ -30,8 +34,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--work-dir", required=True,
                    help="stage-table directory (checkpoint/resume root)")
     p.add_argument("--matchers", default="exact,simhash,minhash,substring")
-    p.add_argument("--simhash-scheme", default="combo",
-                   choices=["single", "combo"])
     p.add_argument("--id-col", default="url")
     p.add_argument("--resume", action="store_true",
                    help="skip stages whose tables already exist")
@@ -44,8 +46,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                    help="SimHash precision dial (pipeline default 0.3); "
                         "pass a negative value to disable (pure "
                         "hash+threshold semantics)")
-    p.add_argument("--simhash-confirm-mode", default="est",
-                   choices=["est", "exact"])
     return p.parse_args(argv)
 
 
@@ -83,9 +83,7 @@ def main(argv: list[str] | None = None) -> int:
     result = pipeline.run(
         pages, args.work_dir, cfg=cfg, resume=args.resume,
         matchers=tuple(args.matchers.split(",")),
-        simhash_scheme=args.simhash_scheme, id_col=args.id_col,
-        simhash_confirm_jaccard=confirm,
-        simhash_confirm_mode=args.simhash_confirm_mode,
+        id_col=args.id_col, simhash_confirm_jaccard=confirm,
     )
     summary = {
         "n_docs": result.stage_rows.get("documents"),

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -20,6 +21,10 @@ SF0001 = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    # The session default (32g) lets the heap grow past the RAM of a small
+    # test host, where the kernel then kills the JVM late in the run.  The
+    # test data needs far less; an explicit WEBDEDUP_DRIVER_MEM still wins.
+    os.environ.setdefault("WEBDEDUP_DRIVER_MEM", "4g")
     s = get_spark(app_name="webdedup-tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()

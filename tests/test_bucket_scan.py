@@ -104,7 +104,7 @@ def test_lsh_cosine_blocked_equals_fold_across_batches(spark):
 def test_simhash_edges_blocked_default_components(docs, corpus_texts):
     """simhash_edges yields the same components as brute force."""
     from webdedup import oracle
-    e = simhash_lsh.simhash_edges(docs, cfg=CFG, scheme="combo")
+    e = simhash_lsh.simhash_edges(docs, cfg=CFG)
     got = {(r["a"], r["b"]) for r in e.collect()}
     ids = sorted(corpus_texts)
     exp = oracle.simhash_pairs(corpus_texts, CFG)

@@ -50,23 +50,6 @@ def test_duplicate_and_reversed_edges(spark):
     _check(spark, [(1, 2), (2, 1), (1, 2), (2, 3), (3, 2)])
 
 
-def test_two_phase_equals_single_phase(spark):
-    """Two-phase CC (local union-find contraction, then star rounds) must be
-    result-identical to the pure star-rounds path on an adversarial mix of
-    long chains + blobs spread across partitions."""
-    rng = random.Random(7)
-    edges = [(i, i + 1) for i in range(0, 400, 1)]          # one long chain
-    edges += [(500 + rng.randrange(50), 500 + rng.randrange(50))
-              for _ in range(120)]                           # dense blob
-    edges += [(1000 + 2 * i, 1001 + 2 * i) for i in range(40)]  # tiny pairs
-    edf = spark.createDataFrame(edges, ["u", "v"]).repartition(16)
-    one = {r["id"]: r["cluster_id"] for r in
-           connected_components(edf, cfg=CFG, local_phase=False).collect()}
-    two = {r["id"]: r["cluster_id"] for r in
-           connected_components(edf, cfg=CFG, local_phase=True).collect()}
-    assert one == two
-
-
 def test_two_phase_string_ids(spark):
     """The local contraction is type-agnostic (urls cluster like longs)."""
     edges = [("u/a", "u/b"), ("u/b", "u/c"), ("x/p", "x/q")]
@@ -77,22 +60,38 @@ def test_two_phase_string_ids(spark):
                    "x/p": "x/p", "x/q": "x/p"}
 
 
-def test_contract_then_star_rounds_path(spark):
+def _star_rounds_equals_oracle(spark, edges, parts):
     """Force the at-scale path (contraction + iterated star rounds) by
-    setting the local-finish cutoff to 0; must equal the local-finish
+    setting the local-finish cutoff to 0; it must equal the local-finish
     result and the oracle."""
     from dataclasses import replace
-    import random as _r
-    rng = _r.Random(11)
-    nodes = list(range(300))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(260)]
-    edf = spark.createDataFrame(edges, ["u", "v"]).repartition(8)
     big_cfg = replace(CFG, cc_local_finish_max_edges=0)
+    edf = spark.createDataFrame(edges, ["u", "v"]).repartition(parts)
     a = {r["id"]: r["cluster_id"] for r in
-         connected_components(edf, cfg=big_cfg, local_phase=True).collect()}
+         connected_components(edf, cfg=big_cfg).collect()}
     b = {r["id"]: r["cluster_id"] for r in
-         connected_components(edf, cfg=CFG, local_phase=True).collect()}
+         connected_components(edf, cfg=CFG).collect()}
     exp = oracle.union_find_clusters(
         sorted({u for e in edges for u in e}),
         {(min(u, v), max(u, v)) for u, v in edges if u != v})
     assert a == b == {i: exp[i] for i in a}
+
+
+def test_contract_then_star_rounds_path(spark):
+    """At-scale CC path on a random graph."""
+    rng = random.Random(11)
+    nodes = list(range(300))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(260)]
+    _star_rounds_equals_oracle(spark, edges, 8)
+
+
+def test_contract_then_star_rounds_adversarial_mix(spark):
+    """At-scale CC path on an adversarial mix spread over 16 partitions:
+    one 400-edge chain (needs many star rounds after the contraction), a
+    dense blob and tiny pairs."""
+    rng = random.Random(7)
+    edges = [(i, i + 1) for i in range(400)]                   # long chain
+    edges += [(500 + rng.randrange(50), 500 + rng.randrange(50))
+              for _ in range(120)]                             # dense blob
+    edges += [(1000 + 2 * i, 1001 + 2 * i) for i in range(40)]  # tiny pairs
+    _star_rounds_equals_oracle(spark, edges, 16)

@@ -225,6 +225,33 @@ def test_jaccard_max_df_cap_equivalent_here(docs, corpus_texts):
     assert capped == exp
 
 
+def test_jaccard_max_df_cap_drops_only_boilerplate_pairs(spark):
+    """Non-vacuous cap: three docs share only one 5-gram (df 3) and two
+    others share a rare one (df 2).  Uncapped == the brute-force oracle;
+    ``max_df=2`` drops exactly the three boilerplate-only pairs and keeps
+    the rare pair with the same exact value."""
+    boiler = "alpha beta gamma delta epsilon"
+    texts = {"b1": boiler + " one", "b2": boiler + " two",
+             "b3": boiler + " three",
+             "r1": "zeta eta theta iota kappa lambda",
+             "r2": "zeta eta theta iota kappa mu"}
+    docs = spark.createDataFrame(sorted(texts.items()),
+                                 "doc_id string, text string")
+
+    def triples(max_df):
+        got = jaccard.jaccard_all_pairs(docs, cfg=CFG, threshold=0.3,
+                                        max_df=max_df)
+        return {(r["a"], r["b"], r["jaccard"]) for r in got.collect()}
+
+    uncapped, capped = triples(None), triples(2)
+    assert {(a, b) for a, b, _ in uncapped} == oracle.jaccard_pairs(
+        texts, 0.3, CFG)
+    boiler_pairs = {("b1", "b2"), ("b1", "b3"), ("b2", "b3")}
+    assert {(a, b) for a, b, _ in uncapped - capped} == boiler_pairs
+    assert capped <= uncapped
+    assert capped == {("r1", "r2", 1 / 3)}
+
+
 def test_ivf_cosine_recall(spark):
     """IVF (second ANN index type): verify admits only true pairs; nprobe
     raises recall; nprobe=k_centroids degenerates to (clustered) full
@@ -296,8 +323,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
 
     for conf in (0.3, 0.95):
         got = _pairset(jaccard_verify(
-            pairs.select("a", "b"), None, cfg=CFG, threshold=conf,
-            sets=sigs.select("id", "shingles")))
+            pairs.select("a", "b"), sigs.select("id", "shingles"), conf))
         exp = exp_sim & oracle.jaccard_pairs(corpus_texts, conf, CFG)
         assert got == exp, (conf, len(got), len(exp))
     # non-vacuous: the high confirmation actually drops some true
@@ -310,8 +336,7 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
     e = simhash_lsh.simhash_edges(
         None, cfg=CFG, sigs=sigs.select("id", "simhash"))
     conf_edges = _pairset(jaccard_verify(
-        e.select("a", "b"), None, cfg=CFG, threshold=0.3,
-        sets=sigs.select("id", "shingles")))
+        e.select("a", "b"), sigs.select("id", "shingles"), 0.3))
     full = exp_sim & oracle.jaccard_pairs(corpus_texts, 0.3, CFG)
     assert conf_edges <= full, "confirmed edge admits an unconfirmed pair"
 

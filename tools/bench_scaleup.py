@@ -7,13 +7,19 @@ run's at the same core count, evidencing that recorded small-corpus numbers
 are floor-bound, not throughput-bound.  Results land in BENCH.md.
 
 Usage:  python tools/bench_scaleup.py [cores] [corpus_dir] [--production]
-                                      [--recall]
+                                      [--recall] [--no-confirm]
 Prints one JSON line: {"docs": N, "cores": C, "total_sec": T,
 "docs_per_sec": R, "stages": {...}}.
 
 ``--production`` runs the documented production dials — hash_scheme=
 'tokmix' + minhash_fast_accept='auto' — instead of the oracle-exact
 defaults; the mode is recorded in the JSON.
+
+``--no-confirm`` turns the SimHash Jaccard confirmation off (the pure
+hash+threshold semantics); by default the run keeps the pipeline's
+est-mode confirm at 0.3.  The JSON keeps the ``simhash_confirm_mode`` key
+("est", or null when the confirmation is off) so rows stay comparable with
+the older BENCH.md rows.
 
 ``--recall`` (VERDICT r4 #2) additionally scores planted dup-pair recall:
 the bench corpus is ``corpus_df(seed=42, ...)`` whose groups plant
@@ -79,24 +85,17 @@ def main() -> None:
         cfg = replace(cfg, minhash_bands=b, minhash_rows=r)
     for w in cfg.banding_warnings(n_docs=250_000):
         print(f"# banding_warnings: {w}", file=sys.stderr)
-    # SimHash precision confirmation (see pipeline.run docstring): the r6
-    # pipeline DEFAULT is the near-free est-mode confirm at 0.3 and this
-    # tool rides it; --confirm switches to exact shingle-Jaccard confirm,
-    # --no-confirm restores the pure hash+threshold semantics.
-    if "--no-confirm" in sys.argv:
-        confirm, confirm_mode = None, "est"
-    elif "--confirm" in sys.argv:
-        confirm, confirm_mode = 0.3, "exact"
-    else:  # default == pipeline default (est mode; --confirm-est accepted)
-        confirm, confirm_mode = 0.3, "est"
+    # SimHash precision confirmation (see pipeline.run docstring): this
+    # tool rides the pipeline default of 0.3; --no-confirm restores the
+    # pure hash+threshold semantics.
+    confirm = None if "--no-confirm" in sys.argv else 0.3
     try:
         pages = spark.read.parquet(corpus)
         n_docs = pages.count()
         t0 = time.time()
         res = pipeline.run(pages, work, cfg=cfg, resume=False,
                            record_metrics=False, minhash_fast_accept=fast,
-                           simhash_confirm_jaccard=confirm,
-                           simhash_confirm_mode=confirm_mode)
+                           simhash_confirm_jaccard=confirm)
         res.assignments.count()
         total = time.time() - t0
         out = {
@@ -105,7 +104,7 @@ def main() -> None:
             "mode": "production" if production else "default",
             "minhash_bands_rows": [cfg.minhash_bands, cfg.minhash_rows],
             "simhash_confirm_jaccard": confirm,
-            "simhash_confirm_mode": confirm_mode if confirm else None,
+            "simhash_confirm_mode": "est" if confirm else None,
             "total_sec": round(total, 1),
             "docs_per_sec": round(n_docs / total, 1),
             "stages": {k: round(v, 2) for k, v in res.stage_seconds.items()},

@@ -51,8 +51,7 @@ try:
         shutil.rmtree(work2, ignore_errors=True)
     exp = oracle.union_find_clusters(
         sorted(texts), oracle.all_matcher_pairs(
-            texts, CFG, simhash_confirm_jaccard=0.3,
-            simhash_confirm_mode="est"))
+            texts, CFG, simhash_confirm_jaccard=0.3))
     gp, ep = partitions(got), partitions(exp)
     print("partitions equal (confirmed default):", gp == ep)
     exp_off = oracle.union_find_clusters(

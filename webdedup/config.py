@@ -64,11 +64,9 @@ class DedupConfig:
     # --- substring (suffix/anchor) pass ---
     anchor_tokens: int = 16       # anchor k-gram length in tokens
     anchor_mod: int = 8           # keep anchors with hash % mod == 0 (winnowing-ish)
-    substring_min_tokens: int = 32  # two sampled anchors ~ >=32-token overlap
 
     # --- embedding similarity ---
     embedding_dim: int = 64
-    cosine_threshold: float = 0.90
     topk: int = 10
     # random-hyperplane LSH for embeddings: 64-bit signature split into 8
     # bands of 8 bits.  Per-band collision for UNCORRELATED vectors is 2^-8
@@ -87,7 +85,6 @@ class DedupConfig:
 
     # --- connected components ---
     cc_max_iterations: int = 50
-    cc_checkpoint_every: int = 3
     # after the per-partition contraction, graphs at or below this many
     # edges are finished by ONE single-task union-find instead of iterated
     # global star rounds (the classic contract-then-solve-locally cutoff; at

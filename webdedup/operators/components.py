@@ -141,7 +141,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     cfg: DedupConfig = DEFAULT,
-    local_phase: bool = True,
 ) -> DataFrame:
     """edges(u, v) [+ optional nodes(id)] -> assignments (id, cluster_id).
 
@@ -149,31 +148,27 @@ def connected_components(
     matching the local union-find oracle).  Nodes present in ``nodes`` but in
     no edge become singleton clusters of themselves.
 
-    ``local_phase``: run the per-partition union-find contraction first
-    (two-phase CC) — same result, fewer global star rounds.
+    Two-phase CC: a per-partition union-find contraction runs first, then
+    either one single-task union-find pass (small contraction) or the global
+    star rounds.
     """
     e = _canon(edges.select(F.col(edges.columns[0]).alias("u"),
                             F.col(edges.columns[1]).alias("v")))
-    solved = False
-    if local_phase:
-        e = _local_contract(e).localCheckpoint(eager=False)
-        n_edges = e.count()  # one job: materialize + size the contraction
-        if n_edges <= cfg.cc_local_finish_max_edges and \
-                n_edges * _est_edge_bytes(e) <= cfg.cc_local_finish_max_bytes:
-            # contract-then-solve-locally: the whole contracted graph fits
-            # one task, so a second union-find pass over ONE partition
-            # yields the final component-min stars directly — no iterated
-            # global rounds, no per-round job latency.  (The iterative path
-            # below remains the route whenever the contraction is still
-            # large — the cutoff is edge count AND estimated bytes: long ids
-            # cost ~16 B/edge, but url-string ids cost hundreds including
-            # Python object + union-find dict overhead, so the byte gate
-            # derates the edge cutoff automatically for wide id types.)
-            e = _local_contract(e.coalesce(1)).localCheckpoint(eager=True)
-            solved = True
-    if not solved:
-        if not local_phase:
-            e = e.localCheckpoint(eager=True)  # contraction already did
+    e = _local_contract(e).localCheckpoint(eager=False)
+    n_edges = e.count()  # one job: materialize + size the contraction
+    if n_edges <= cfg.cc_local_finish_max_edges and \
+            n_edges * _est_edge_bytes(e) <= cfg.cc_local_finish_max_bytes:
+        # contract-then-solve-locally: the whole contracted graph fits one
+        # task, so a second union-find pass over ONE partition yields the
+        # final component-min stars directly — no iterated global rounds,
+        # no per-round job latency.  (The star rounds below remain the route
+        # whenever the contraction is still large — the cutoff is edge count
+        # AND estimated bytes: long ids cost ~16 B/edge, but url-string ids
+        # cost hundreds including Python object + union-find dict overhead,
+        # so the byte gate derates the edge cutoff automatically for wide
+        # id types.)
+        e = _local_contract(e.coalesce(1)).localCheckpoint(eager=True)
+    else:
         e = _star_rounds(e, cfg)
 
     assign = (

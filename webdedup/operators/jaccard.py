@@ -6,17 +6,16 @@ set Jaccard over 5-gram shingles (SURVEY §2.2 P11):
 
     J(A,B) = |A n B| / (|A u B|)
 
-computed two ways:
+with one pair-generation plan and one verify kernel:
 
 - ``jaccard_verify``    — for an existing candidate-pair frame: join shingle
   *sets* to both sides and count |A n B| with a vectorized numpy kernel.
-- ``jaccard_all_pairs`` — exact all-pairs via the inverted-index pattern:
-  explode distinct (doc, shingle-hash), self-join on shingle-hash, count
-  co-occurrences = |A n B|, then J = inter / (|A|+|B|-inter).  Any pair with
-  J > 0 shares >= 1 shingle, so recall is exactly 1.0 — this is the
-  DuckDB-oracle-matched operator.  Document-frequency capping
-  (``max_df``) is the web-scale escape hatch for stopword shingles; the
-  oracle query runs uncapped.
+- ``jaccard_all_pairs`` — exact all-pairs: explode (doc, shingle-hash), drop
+  shingles above the document-frequency cap ``max_df`` (``None`` = no
+  cap), self-join on shingle-hash for the distinct candidate pairs, then
+  ``jaccard_verify`` them.  Any pair with J > 0 shares >= 1 shingle, so
+  uncapped recall is exactly 1.0 — the DuckDB-oracle-matched operator.
+  The cap is the web-scale escape hatch for stopword shingles.
 """
 
 from __future__ import annotations
@@ -59,22 +58,6 @@ def shingle_sets(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def shingle_index(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                  max_df: int | None = None) -> DataFrame:
-    """Long-form inverted index (id, sh) of distinct shingle hashes."""
-    idx = (
-        shingle_sets(df, id_col, text_col, cfg)
-        .select("id", F.explode("shingles").alias("sh"))
-    )
-    if max_df is not None:
-        from pyspark.sql import Window
-        w = Window.partitionBy("sh")
-        idx = (idx.withColumn("_df", F.count(F.lit(1)).over(w))
-               .filter(F.col("_df") <= max_df).drop("_df"))
-    return idx
-
-
 def jaccard_all_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", cfg: DedupConfig = DEFAULT,
                       threshold: float | None = None,
@@ -82,88 +65,57 @@ def jaccard_all_pairs(df: DataFrame, id_col: str = "doc_id",
                       sets: DataFrame | None = None) -> DataFrame:
     """(a, b, jaccard) for every pair with J >= threshold — exact values.
 
-    ``max_df=None``: the fully-exact inverted-index plan (recall 1.0 by
-    construction) — the DuckDB-oracle shape, quadratic in the document
-    frequency of common shingles, so NOT the web-scale default.
-
-    ``max_df=k``: candidate pairs are generated only from shingles with
-    document frequency <= k (the boilerplate-stopword cap that bounds the
-    self-join's per-key fan-out at scale), then verified with exact Jaccard
-    over the FULL shingle sets — J values are identical to the uncapped
-    plan; only pairs sharing exclusively ultra-common shingles can be
-    missed.  On the sf0.01 oracle data max shingle df = 3, so capped and
-    uncapped results coincide and the uncapped DuckDB twin still matches.
+    Candidate pairs are the distinct pairs sharing a shingle whose document
+    frequency is <= ``max_df``, verified with exact Jaccard over the FULL
+    shingle sets (``jaccard_verify``).  ``max_df=None`` skips the df filter:
+    every pair with J > 0 is a candidate, so the result is the brute-force
+    pair set (the DuckDB-oracle shape, quadratic in the document frequency
+    of common shingles, so NOT the web-scale setting).  ``max_df=k`` is the
+    boilerplate-stopword cap that bounds the self-join's per-key fan-out at
+    scale: J values are unchanged; only pairs sharing exclusively
+    ultra-common shingles are missed.  On the sf0.01 oracle data max
+    shingle df = 3, so capped and uncapped results coincide and the
+    uncapped DuckDB twin still matches.
     """
     t = cfg.jaccard_threshold if threshold is None else threshold
+    if sets is None:
+        sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
+            eager=False)  # shared by the index + the verify join
+    idx = sets.select("id", F.explode("shingles").alias("sh"))
     if max_df is not None:
-        if sets is None:
-            sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
-                eager=False)  # shared by the capped index + the verify join
-        idx = sets.select("id", F.explode("shingles").alias("sh"))
         from pyspark.sql import Window
         w = Window.partitionBy("sh")
-        idx_c = (idx.withColumn("_df", F.count(F.lit(1)).over(w))
-                 .filter(F.col("_df") <= max_df).drop("_df"))
-        cands = (
-            idx_c.select(F.col("id").alias("a"), "sh")
-            .join(idx_c.select(F.col("id").alias("b"), "sh"), "sh")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        return jaccard_verify(cands, df, id_col, text_col, cfg, t, sets=sets)
-
-    if sets is not None:
-        idx = (sets.select("id", F.explode("shingles").alias("sh"))
-               .localCheckpoint(eager=False))
-    else:
-        idx = shingle_index(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)  # used by sizes + both self-join arms
-    sizes = idx.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
+        idx = (idx.withColumn("_df", F.count(F.lit(1)).over(w))
+               .filter(F.col("_df") <= max_df).drop("_df"))
+    cands = (
         idx.select(F.col("id").alias("a"), "sh")
         .join(idx.select(F.col("id").alias("b"), "sh"), "sh")
         .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+        .select("a", "b")
+        .distinct()
     )
-    return (
-        inter
-        .join(sizes.select(F.col("id").alias("a"), F.col("sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col("id").alias("b"), F.col("sz").alias("sz_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= t)
-        .select("a", "b", "jaccard")
-    )
+    return jaccard_verify(cands, sets, t)
 
 
-def jaccard_verify(cands: DataFrame, df: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                   threshold: float | None = None,
-                   sets: DataFrame | None = None) -> DataFrame:
+def jaccard_verify(cands: DataFrame, sets: DataFrame,
+                   threshold: float) -> DataFrame:
     """Verify candidate (a, b) pairs with exact shingle-set Jaccard.
 
     The join back to the corpus is the reference's candidate-verification
     join J6 (``simhash.cpp:250-256`` / ``minhash_search.py:73-83``).
-    Pass a materialized ``sets`` (from ``shingle_sets``) to avoid recomputing
-    shingles inside a multi-join plan.
+    ``sets`` is a materialized (id, shingles) frame (``shingle_sets`` or
+    the ``shingles`` column of the signature stage table).
 
     Plan (r6 — the 1M-doc edges_minhash whale): join each side's shingle
     ARRAY to the pair once (two shuffle joins, sized by the candidate list,
     so only candidate ids' arrays ever move) and compute |A∩B| with a
     vectorized-batch numpy kernel — no per-shingle pair-row explosion, no
-    giant groupBy.  Empty-vs-empty pairs score 0.0 (0/0).  This is NOT
+    giant groupBy.  J = inter / (|A| + |B| - inter), one float64 division
+    of exact integers; empty-vs-empty pairs score 0.0 (0/0).  This is NOT
     the r3-rejected wide-array BROADCAST plan (per-task broadcast
     deserialization GC): both sides arrive by shuffle join.  The
     jaccard/minhash oracle rows and ``oracle.jaccard_pairs`` pin the
     values."""
-    t = cfg.jaccard_threshold if threshold is None else threshold
-    if sets is None:
-        sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)
     sa = sets.select(F.col("id").alias("a"), F.col("shingles").alias("sh_a"))
     sb = sets.select(F.col("id").alias("b"), F.col("shingles").alias("sh_b"))
 
@@ -183,5 +135,5 @@ def jaccard_verify(cands: DataFrame, df: DataFrame, id_col: str = "doc_id",
 
     return (cands.select("a", "b").join(sa, "a").join(sb, "b")
             .withColumn("jaccard", _jac(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= t)
+            .filter(F.col("jaccard") >= threshold)
             .select("a", "b", "jaccard"))

@@ -228,12 +228,11 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                                 F.lit(True).alias("estimated")))
             uncertain = (est.filter(F.col("est_jaccard") < fast_accept)
                          .select("a", "b"))
-            verified = jaccard_verify(uncertain, df, id_col, text_col, cfg,
-                                      t, sets=sets
+            verified = jaccard_verify(uncertain, sets, t
                                       ).withColumn("estimated", F.lit(False))
             return verified.unionByName(accepted)
         cands = est.select("a", "b")
-    return jaccard_verify(cands, df, id_col, text_col, cfg, t, sets=sets)
+    return jaccard_verify(cands, sets, t)
 
 
 def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,

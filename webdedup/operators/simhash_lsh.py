@@ -12,7 +12,9 @@ recall** (SURVEY §2.3 J2):
   differing bits touch <= 5 blocks, so >= 3 blocks are identical and the pair
   collides in >= 1 table (pigeonhole; B > k).  Recall 1.0.  Keyspace per
   table is 2^8, so candidate volume grows ~n^2/256 — fine to ~1M docs,
-  wrong at web scale.
+  wrong at web scale.  It serves only the query rows that name it
+  (``__spark_entry__``'s ``simhash_band_stats`` / ``median_candidate_hamming``
+  and ``simhash_pairs``' default); no matcher bands with it.
 
 - ``scheme='combo'`` — Manku et al. (WWW'07 "Detecting Near-Duplicates for
   Web Crawling") style block combinations: one table per C(8,3)=56 choice of
@@ -21,7 +23,8 @@ recall** (SURVEY §2.3 J2):
   of them -> collides on that table.  Recall 1.0 with a 2^24 keyspace:
   at 10^12 docs each table bucket holds ~n/2^24 docs, candidate volume is
   ~56 * n^2 / 2^24 ~ 3.3e-6 * n^2 — 13,000x fewer candidates per table pair
-  than 'single'.  This is the 100 TB path.
+  than 'single'.  This is the 100 TB path, and the only banding the
+  matchers use (``simhash_edges`` and the streaming matcher take no scheme).
 
 Hot buckets (boilerplate pages collapsing to one fingerprint region) are
 handled upstream by fingerprint-dedup (``simhash_edges``) and inside the
@@ -213,9 +216,8 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 
 def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                   text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                  scheme: str = "combo",
                   sigs: DataFrame | None = None) -> DataFrame:
-    """Scale path for the pipeline: (a, b) edges.
+    """Scale path for the pipeline: (a, b) edges, banded with ``combo``.
 
     Docs are first collapsed to *distinct fingerprints* (exact clones and
     identical-fingerprint docs form star edges directly — the boilerplate
@@ -239,5 +241,5 @@ def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     )
     reps = tagged.filter(F.col("id") == F.col("rep")).select("id", "simhash")
     rep_pairs = blocked_hamming_pairs(
-        simhash_bands(reps, cfg, scheme), cfg.hamming_threshold)
+        simhash_bands(reps, cfg, "combo"), cfg.hamming_threshold)
     return clone_edges.unionByName(rep_pairs.select("a", "b"))

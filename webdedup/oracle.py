@@ -108,44 +108,28 @@ def est_jaccard_local(sig_a: list[int], sig_b: list[int]) -> float:
 
 
 def confirmed_simhash_pairs(docs: dict[str, str], cfg: DedupConfig = DEFAULT,
-                            confirm_jaccard: float | None = 0.3,
-                            confirm_mode: str = "est") -> set[Pair]:
-    """SimHash pairs that ALSO clear the Jaccard confirmation — the local
-    twin of the pipeline's default simhash matcher (precision dial, r5):
-    'est' confirms with the signature estimate, 'exact' with exact shingle
-    Jaccard."""
+                            confirm_jaccard: float | None = 0.3) -> set[Pair]:
+    """SimHash pairs whose signature-estimate Jaccard ALSO clears the
+    confirmation — the local twin of the pipeline's default simhash
+    matcher (precision dial, r5)."""
     pairs = simhash_pairs(docs, cfg)
     if confirm_jaccard is None:
         return pairs
-    if confirm_mode == "est":
-        sigs = minhash_signatures_local(docs, cfg)
-        return {(a, b) for a, b in pairs
-                if est_jaccard_local(sigs[a], sigs[b]) >= confirm_jaccard}
-    if confirm_mode == "exact":
-        from webdedup.functions.tokenize import shingles_py, tokenize_py
-        sets = {i: set(shingles_py(tokenize_py(t), cfg.shingle_k))
-                for i, t in docs.items()}
-        out = set()
-        for a, b in pairs:
-            u = len(sets[a] | sets[b])
-            if u and len(sets[a] & sets[b]) / u >= confirm_jaccard:
-                out.add((a, b))
-        return out
-    raise ValueError(confirm_mode)
+    sigs = minhash_signatures_local(docs, cfg)
+    return {(a, b) for a, b in pairs
+            if est_jaccard_local(sigs[a], sigs[b]) >= confirm_jaccard}
 
 
 def all_matcher_pairs(docs: dict[str, str],
                       cfg: DedupConfig = DEFAULT,
-                      simhash_confirm_jaccard: float | None = None,
-                      simhash_confirm_mode: str = "est") -> set[Pair]:
-    """Union of the four matchers.  Pass
-    ``simhash_confirm_jaccard=0.3, simhash_confirm_mode='est'`` to mirror
-    the pipeline's production default (the SimHash precision dial);
+                      simhash_confirm_jaccard: float | None = None
+                      ) -> set[Pair]:
+    """Union of the four matchers.  Pass ``simhash_confirm_jaccard=0.3`` to
+    mirror the pipeline's production default (the SimHash precision dial);
     ``None`` mirrors the pure hash+threshold semantics."""
     return (
         exact_pairs(docs)
-        | confirmed_simhash_pairs(docs, cfg, simhash_confirm_jaccard,
-                                  simhash_confirm_mode)
+        | confirmed_simhash_pairs(docs, cfg, simhash_confirm_jaccard)
         | jaccard_pairs(docs, cfg.jaccard_threshold, cfg)
         | substring_pairs(docs, cfg)
     )

@@ -3,7 +3,8 @@
 Stand-in for Iceberg snapshots (no Iceberg runtime in the sandbox): a stage
 table is "committed" iff Spark's ``_SUCCESS`` marker exists, which Spark
 writes only after all tasks commit — so a killed job never half-resumes.
-Resume-from-checkpoint (north_rule) = ``exists() ? read : compute+write``.
+Resume-from-checkpoint (north_rule) = ``exists() ? read : write, then read``
+(``plans.pipeline.run``'s ``stage``).
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ def exists(work_dir: str, name: str) -> bool:
 
 def write(df: DataFrame, work_dir: str, name: str,
           partitions: int | None = None) -> None:
+    """``partitions`` controls the written file count (one read partition
+    per file for small tables — keeps downstream parallelism up)."""
     out = df.repartition(partitions) if partitions else df
     out.write.mode("overwrite").parquet(table_path(work_dir, name))
 
@@ -41,20 +44,3 @@ def row_count(work_dir: str, name: str) -> int:
         if f.endswith(".parquet"):
             total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
     return total
-
-
-def materialize(df: DataFrame, work_dir: str, name: str,
-                resume: bool = True,
-                partitions: int | None = None) -> DataFrame:
-    """Compute-or-load: the core resume primitive.
-
-    Returns a DataFrame backed by the stage table either way, so downstream
-    stages read a stable, shuffle-free scan instead of recomputing lineage.
-    ``partitions`` controls the written file count (one read partition per
-    file for small tables — keeps downstream parallelism up).
-    """
-    spark = df.sparkSession
-    if resume and exists(work_dir, name):
-        return read(spark, work_dir, name)
-    write(df, work_dir, name, partitions=partitions)
-    return read(spark, work_dir, name)

@@ -40,13 +40,11 @@ def run(
     cfg: DedupConfig = DEFAULT,
     resume: bool = True,
     matchers: tuple[str, ...] = ("exact", "simhash", "minhash", "substring"),
-    simhash_scheme: str = "combo",
     id_col: str = "url",
     record_metrics: bool = True,
     truth_pairs: DataFrame | None = None,
     minhash_fast_accept: float | None | str = None,
     simhash_confirm_jaccard: float | None = 0.3,
-    simhash_confirm_mode: str = "est",
 ) -> PipelineResult:
     """pages: web_pages-shaped input (url, warc_ts, html[, text], lang).
 
@@ -75,37 +73,33 @@ def run(
 
     ``simhash_confirm_jaccard``: precision dial for the SimHash matcher,
     ON by default at 0.3 (r5 measured it at 250k: precision 0.027 -> 1.0,
-    recall 1.0, zero stage cost in 'est' mode — VERDICT r5 #2 flipped it
-    to the default).  64-bit SimHash over stopword-heavy bags pulls
-    UNRELATED short/low-entropy docs within the Hamming threshold (the
-    measured 250k mega-cluster: 2,900 cross-group Hamming<=5 edges chain
-    a 4,748-member component, BENCH.md r5 — the known precision floor
-    that makes Manku et al. run h=3 at web scale).  When set, every
-    SimHash edge must ALSO clear shingle Jaccard >= this value.  Planted
-    near-dup variants are 1-2 token edits with Jaccard ~0.9, so a low
-    confirmation (0.2-0.3) removes the stopword-mass collisions without
-    touching real dups.  The filter applies to the STAR-COLLAPSED edge
-    list ``simhash_edges`` emits (every surviving edge is individually
-    Hamming-AND-Jaccard verified); an identical-fingerprint class
-    therefore re-splits by each member's overlap with the class
-    representative — which is the point: identical fingerprints over
-    different token sets ARE the collision being removed.  ``None`` is
-    the OFF switch: the reference's pure hash+threshold semantics, which
-    every oracle row checks (the local oracle mirrors both settings —
+    recall 1.0, zero stage cost — VERDICT r5 #2 flipped it to the
+    default).  64-bit SimHash over stopword-heavy bags pulls UNRELATED
+    short/low-entropy docs within the Hamming threshold (the measured
+    250k mega-cluster: 2,900 cross-group Hamming<=5 edges chain a
+    4,748-member component, BENCH.md r5 — the known precision floor that
+    makes Manku et al. run h=3 at web scale).  When set, every SimHash
+    edge must ALSO clear Jaccard >= this value.  Planted near-dup variants
+    are 1-2 token edits with Jaccard ~0.9, so a low confirmation (0.2-0.3)
+    removes the stopword-mass collisions without touching real dups.  The
+    filter applies to the STAR-COLLAPSED edge list ``simhash_edges`` emits
+    (every surviving edge is individually Hamming-AND-Jaccard verified);
+    an identical-fingerprint class therefore re-splits by each member's
+    overlap with the class representative — which is the point: identical
+    fingerprints over different token sets ARE the collision being
+    removed.  ``None`` is the OFF switch: the reference's pure
+    hash+threshold semantics, which every oracle row checks (the local
+    oracle mirrors both settings —
     ``oracle.all_matcher_pairs(simhash_confirm_jaccard=...)``).
 
-    ``simhash_confirm_mode``: ``'est'`` (default) confirms with the
-    128-perm SIGNATURE estimate (one ``zip_with`` over the
-    already-materialized minhash column — the same re-rank metric as
+    The confirmation scores each edge with the 128-perm SIGNATURE estimate
+    (the Arrow ``signature_jaccard`` kernel over the already-materialized
+    minhash column — the same re-rank metric as
     ``minhash_search.py:81-83``): unbiased, σ = sqrt(J(1-J)/128) ≈ 0.04,
     so collisions (J ≲ 0.1) and real near-dup edits (J ≳ 0.5) are both
     >3σ from a 0.3 cutoff — deterministic per corpus, near-free, and the
-    right default at 10^12 docs where the exact confirm would re-shuffle
-    every edge endpoint's shingle set.  ``'exact'`` confirms with exact
-    shingle-set Jaccard instead (measured +60 s at 250k/4 cores —
-    the shingle join over every edge endpoint).  Borderline pairs within
-    ±3σ of the cutoff can flip between modes (the pytest contract pins
-    the two modes' agreement outside that band).
+    right choice at 10^12 docs where an exact confirm would re-shuffle
+    every edge endpoint's shingle set.
     """
     spark = pages.sparkSession
     times: dict[str, float] = {}
@@ -115,10 +109,11 @@ def run(
     def stage(name: str, build) -> DataFrame:
         t0 = time.time()
         was_done = checkpoint.exists(work_dir, name)
-        df = (checkpoint.read(spark, name=name, work_dir=work_dir)
-              if (resume and was_done)
-              else checkpoint.materialize(build(), work_dir, name,
-                                          resume=resume, partitions=par))
+        if not (resume and was_done):
+            checkpoint.write(build(), work_dir, name, partitions=par)
+        # either way downstream stages read a stable, shuffle-free scan of
+        # the stage table instead of recomputing lineage
+        df = checkpoint.read(spark, work_dir, name)
         # AQE coalesces small shuffles to few partitions, which would starve
         # downstream UDF stages of parallelism; re-expand cheap small tables.
         # (At production scale stage tables have >> `par` partitions anyway;
@@ -170,36 +165,24 @@ def run(
     if "simhash" in matchers:
         def _sim():
             e = simhash_lsh.simhash_edges(
-                None, cfg=cfg, scheme=simhash_scheme,
-                sigs=sigs.select("id", "simhash"))
+                None, cfg=cfg, sigs=sigs.select("id", "simhash"))
             if simhash_confirm_jaccard is not None:
-                if simhash_confirm_mode == "exact":
-                    from webdedup.operators.jaccard import jaccard_verify
-                    e = jaccard_verify(
-                        e.select("a", "b"), None, cfg=cfg,
-                        threshold=simhash_confirm_jaccard,
-                        sets=sigs.select("id", "shingles"))
-                elif simhash_confirm_mode == "est":
-                    # empty-token docs carry the sentinel signature and
-                    # would est-score 1.0 against each other (r6 ADVICE:
-                    # e.g. "" vs "  " — NOT exact dups, both tokenize to
-                    # nothing); exact mode drops them (0/0 Jaccard), so
-                    # est mode must too.  Anti-join the (tiny) sentinel-id
-                    # frame before scoring.
-                    from webdedup.functions.hashing import MERSENNE61
-                    sent = (sigs.filter(F.element_at("minhash", 1)
-                                        == F.lit(MERSENNE61)).select("id"))
-                    ee = (e.select("a", "b")
-                          .join(sent.select(F.col("id").alias("a")),
-                                "a", "left_anti")
-                          .join(sent.select(F.col("id").alias("b")),
-                                "b", "left_anti"))
-                    e = minhash_lsh.signature_jaccard(
-                        ee, sigs.select("id", "minhash")
-                    ).filter(
-                        F.col("est_jaccard") >= simhash_confirm_jaccard)
-                else:
-                    raise ValueError(simhash_confirm_mode)
+                # empty-token docs carry the sentinel signature and would
+                # est-score 1.0 against each other (r6 ADVICE: e.g. "" vs
+                # "  " — NOT exact dups, both tokenize to nothing; their
+                # exact Jaccard is 0/0 -> 0).  Anti-join the (tiny)
+                # sentinel-id frame before scoring.
+                from webdedup.functions.hashing import MERSENNE61
+                sent = (sigs.filter(F.element_at("minhash", 1)
+                                    == F.lit(MERSENNE61)).select("id"))
+                ee = (e.select("a", "b")
+                      .join(sent.select(F.col("id").alias("a")),
+                            "a", "left_anti")
+                      .join(sent.select(F.col("id").alias("b")),
+                            "b", "left_anti"))
+                e = minhash_lsh.signature_jaccard(
+                    ee, sigs.select("id", "minhash")
+                ).filter(F.col("est_jaccard") >= simhash_confirm_jaccard)
             return e.select(F.col("a").alias("u"), F.col("b").alias("v"))
         edge_frames.append(stage("edges_simhash", _sim))
     if "minhash" in matchers:

@@ -180,7 +180,7 @@ def read_store(spark: SparkSession, work_dir: str,
 def _scheme_stamp(cfg: DedupConfig) -> dict:
     """The fields that determine stored signature VALUES (not matching
     behavior): implementation version + the config knobs the simhash /
-    content-hash enrichment depends on.  Banding scheme / thresholds are
+    content-hash enrichment depends on.  Band layout / thresholds are
     deliberately absent — they are recomputed per run and may change
     across a resume without corrupting the store."""
     from webdedup.functions.hashing import SIG_SCHEME_VERSION
@@ -242,8 +242,7 @@ def check_scheme_stamp(work_dir: str, cfg: DedupConfig = DEFAULT) -> None:
 
 
 def match_new_against_store(new_sigs: DataFrame, store: DataFrame | None,
-                            cfg: DedupConfig = DEFAULT,
-                            scheme: str = "combo") -> DataFrame:
+                            cfg: DedupConfig = DEFAULT) -> DataFrame:
     """(a, b, hamming): a from the new batch, b from batch ∪ store.
 
     new x old is a band equi-join of the (small) batch band table against
@@ -251,7 +250,7 @@ def match_new_against_store(new_sigs: DataFrame, store: DataFrame | None,
     old pairs were emitted when those docs were themselves new, so the union
     over batches covers exactly every qualifying pair once (canonicalized).
     """
-    nb = simhash_lsh.simhash_bands(new_sigs, cfg, scheme)
+    nb = simhash_lsh.simhash_bands(new_sigs, cfg, "combo")
     new_new = simhash_lsh.band_candidates(nb)
     sigs_all = new_sigs
     if store is not None:
@@ -260,7 +259,7 @@ def match_new_against_store(new_sigs: DataFrame, store: DataFrame | None,
         # (duplicate ids in sigs_all would fan hamming_verify's joins out
         # into duplicate pair rows — the effectively-once guarantee)
         store = store.join(new_sigs.select("id"), "id", "left_anti")
-        ob = simhash_lsh.simhash_bands(store, cfg, scheme)
+        ob = simhash_lsh.simhash_bands(store, cfg, "combo")
         new_old = (
             nb.select(F.col("id").alias("a"), "table_id", "band_key")
             .join(ob.select(F.col("id").alias("b"), "table_id", "band_key"),
@@ -281,7 +280,6 @@ def match_new_against_store(new_sigs: DataFrame, store: DataFrame | None,
 
 def incremental_dedup(spark: SparkSession, input_dir: str, work_dir: str,
                       checkpoint_dir: str, cfg: DedupConfig = DEFAULT,
-                      scheme: str = "combo",
                       max_files_per_trigger: int = 1, once: bool = True,
                       target_rows_per_file: int = 4_000_000):
     """Run the incremental matcher over a page-drop directory stream.
@@ -328,7 +326,7 @@ def incremental_dedup(spark: SparkSession, input_dir: str, work_dir: str,
         def nfiles(n_rows: int) -> int:
             return max(1, min(64, -(-n_rows // target_rows_per_file)))
 
-        pairs = match_new_against_store(new_sigs, store, cfg, scheme) \
+        pairs = match_new_against_store(new_sigs, store, cfg) \
             .localCheckpoint(eager=True)  # count + write from one compute
         (pairs.withColumn("_batch_id", F.lit(batch_id))
          .repartition(nfiles(pairs.count()))
