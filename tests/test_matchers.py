@@ -4,10 +4,14 @@
 
 from __future__ import annotations
 
+from itertools import combinations
+
+import pytest
 from pyspark.sql import functions as F
 
 from webdedup import oracle
 from webdedup.config import DEFAULT as CFG
+from webdedup.functions.hashing import to_signed64
 from webdedup.operators import exact, jaccard, minhash_lsh, simhash_lsh, substring
 
 
@@ -35,6 +39,63 @@ def test_simhash_combo_scheme_equals_bruteforce(docs, corpus_texts):
     got = _pairset(simhash_lsh.simhash_pairs(docs, cfg=CFG, scheme="combo"))
     exp = oracle.simhash_pairs(corpus_texts, CFG)
     assert got == exp
+
+
+@pytest.mark.parametrize("bands", ["single", "combo", "minhash"])
+def test_band_tables_pinned(docs, bands):
+    """Pin every band table, not just the pair set: a key that split one
+    table's buckets would stay invisible to the pair-level tests while
+    another table still caught the pair."""
+    if bands == "minhash":
+        sigs = minhash_lsh.minhash_signatures(docs, cfg=CFG)
+        r, b = CFG.minhash_rows, CFG.minhash_bands
+        got = {(row["id"], row["table_id"]): row["band_key"]
+               for row in minhash_lsh.minhash_bands(sigs, CFG).collect()}
+        exp = {}
+        for row in sigs.select("id", *[
+                F.xxhash64(F.slice("minhash", j * r + 1, r)).alias(f"k{j}")
+                for j in range(b)]).collect():
+            for j in range(b):
+                exp[(row["id"], j)] = row[f"k{j}"]
+        assert got == exp
+        return
+    n_blocks = CFG.simhash_bands
+    width = CFG.simhash_bits // n_blocks
+    keep = 1 if bands == "single" else n_blocks - CFG.hamming_threshold
+    tables = list(combinations(range(n_blocks), keep))
+    block, full = (1 << width) - 1, (1 << 64) - 1
+    sigs = simhash_lsh.simhash_fingerprints(docs, cfg=CFG)
+    # synthetic fingerprints around a real one, so that a stray or missing
+    # key bit shows whatever the fixture's buckets: per table, one agreeing
+    # only on that table's kept bits (must share its bucket); per block,
+    # one flipping that block's low bit (must leave every table keeping it)
+    f = sigs.first()["simhash"] & full
+    extra = [f ^ (full & ~sum(block << (i * width) for i in kept))
+             for kept in tables] + [f ^ (1 << (i * width))
+                                    for i in range(n_blocks)]
+    sigs = sigs.unionByName(docs.sparkSession.createDataFrame(
+        [(f"synthetic-{k}", to_signed64(v)) for k, v in enumerate(extra)],
+        sigs.schema))
+    rows = simhash_lsh.simhash_bands(sigs, CFG, bands).collect()
+    per_doc = {}
+    for row in rows:
+        per_doc.setdefault(row["id"], []).append(row["table_id"])
+    assert per_doc and all(sorted(t) == list(range(len(tables)))
+                           for t in per_doc.values())
+    largest = 0
+    for t, kept in enumerate(tables):
+        by_key, by_blocks = {}, {}
+        for row in rows:
+            if row["table_id"] != t:
+                continue
+            u = row["simhash"] & full
+            blocks = tuple((u >> (i * width)) & block for i in kept)
+            by_key.setdefault(row["band_key"], set()).add(row["id"])
+            by_blocks.setdefault(blocks, set()).add(row["id"])
+        got = {frozenset(v) for v in by_key.values()}
+        assert got == {frozenset(v) for v in by_blocks.values()}, t
+        largest = max(largest, *map(len, got))
+    assert largest >= 2, "no bucket with two members: the check is vacuous"
 
 
 def test_jaccard_all_pairs_equals_bruteforce(docs, corpus_texts):

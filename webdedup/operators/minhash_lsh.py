@@ -37,9 +37,11 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
 
 def minhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
     """(id, table_id, band_key) — band j is a 64-bit hash of signature rows
-    [j*r, (j+1)*r).  ``xxhash64`` is fine here (Spark-internal only; the
-    band hash never needs a DuckDB twin because banding is the approximate
-    candidate step, not an oracle-checked value).
+    [j*r, (j+1)*r): ``table_id`` explodes the literal array [0, b) and the
+    key is ``xxhash64(slice(minhash, table_id*r + 1, r))``, whatever b.
+    ``xxhash64`` is fine here (Spark-internal only; the band hash never
+    needs a DuckDB twin because banding is the approximate candidate step,
+    not an oracle-checked value).
 
     (The DuckDB twin of the *banded candidates* does exist —
     ``oracle_sql._minhash_band_ctes`` expresses band membership as slice
@@ -48,16 +50,11 @@ def minhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
     from webdedup.plans.partitions import ensure_min_partitions
     sigs = ensure_min_partitions(sigs)
     r = cfg.minhash_rows
-    bands = F.array(*[
-        F.struct(
-            F.lit(j).alias("table_id"),
-            F.xxhash64(F.slice(F.col("minhash"), j * r + 1, r)).alias("band_key"),
-        )
-        for j in range(cfg.minhash_bands)
-    ])
+    tables = F.array(*map(F.lit, range(cfg.minhash_bands)))
     return (
-        sigs.select("id", F.explode(bands).alias("tb"))
-        .select("id", "tb.table_id", "tb.band_key")
+        sigs.select("id", "minhash", F.explode(tables).alias("table_id"))
+        .select("id", "table_id", F.xxhash64(F.slice(
+            "minhash", F.col("table_id") * r + 1, r)).alias("band_key"))
     )
 
 

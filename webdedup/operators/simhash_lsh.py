@@ -8,23 +8,25 @@ scan with key-expansion equi-joins that have **provably equal-or-better
 recall** (SURVEY §2.3 J2):
 
 - ``scheme='single'`` — split the 64-bit fingerprint into B=8 disjoint 8-bit
-  blocks, one table per block.  If two fingerprints differ in <= 5 bits, the
-  differing bits touch <= 5 blocks, so >= 3 blocks are identical and the pair
-  collides in >= 1 table (pigeonhole; B > k).  Recall 1.0.  Keyspace per
-  table is 2^8, so candidate volume grows ~n^2/256 — fine to ~1M docs,
-  wrong at web scale.  It serves only the query rows that name it
+  blocks; each table keeps one block.  If two fingerprints differ in <= 5
+  bits, the differing bits touch <= 5 blocks, so >= 3 blocks are identical
+  and the pair collides in >= 1 table (pigeonhole; B > k).  Recall 1.0.
+  Keyspace per table is 2^8, so candidate volume grows ~n^2/256 — fine to
+  ~1M docs, wrong at web scale.  It serves only the query rows that name it
   (``__spark_entry__``'s ``simhash_band_stats`` / ``median_candidate_hamming``
   and ``simhash_pairs``' default); no matcher bands with it.
 
 - ``scheme='combo'`` — Manku et al. (WWW'07 "Detecting Near-Duplicates for
   Web Crawling") style block combinations: one table per C(8,3)=56 choice of
-  3 blocks, key = the 24 concatenated bits.  A pair within Hamming 5 has its
-  differing bits inside <= 5 blocks, so some 3-block combination avoids all
-  of them -> collides on that table.  Recall 1.0 with a 2^24 keyspace:
-  at 10^12 docs each table bucket holds ~n/2^24 docs, candidate volume is
-  ~56 * n^2 / 2^24 ~ 3.3e-6 * n^2 — 13,000x fewer candidates per table pair
-  than 'single'.  This is the 100 TB path, and the only banding the
-  matchers use (``simhash_edges`` and the streaming matcher take no scheme).
+  3 blocks, key = the fingerprint ANDed with the table's mask (the OR of the
+  3 kept blocks' bits), so still 2^24 distinct keys per table.  A pair
+  within Hamming 5 has its differing bits inside <= 5 blocks, so some
+  3-block combination avoids all of them -> collides on that table.
+  Recall 1.0 with a 2^24 keyspace: at 10^12 docs each table bucket holds
+  ~n/2^24 docs, candidate volume is ~56 * n^2 / 2^24 ~ 3.3e-6 * n^2 —
+  13,000x fewer candidates per table pair than 'single'.  This is the
+  100 TB path, and the only banding the matchers use (``simhash_edges`` and
+  the streaming matcher take no scheme).
 
 Hot buckets (boilerplate pages collapsing to one fingerprint region) are
 handled upstream by fingerprint-dedup (``simhash_edges``) and inside the
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from webdedup.config import DedupConfig, DEFAULT
+from webdedup.functions.hashing import to_signed64
 from webdedup.functions.signatures import all_signatures
 from webdedup.operators.bucket_scan import bucket_scan
 
@@ -55,18 +58,20 @@ def simhash_fingerprints(df: DataFrame, id_col: str = "doc_id",
     return all_signatures(df, cfg, id_col, text_col, kinds=("simhash",))
 
 
-def _block(sig, i: int, width: int):
-    """Unsigned extraction of block i (low-to-high) of `width` bits."""
-    return F.shiftrightunsigned(sig, i * width).bitwiseAND(F.lit((1 << width) - 1))
-
-
 def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
                   scheme: str = "single") -> DataFrame:
     """(id, simhash, table_id, band_key) — the exploded LSH 'index'.
 
+    One table per ``combinations(range(B), keep)`` element (``keep`` = 1
+    for ``single``, B - hamming_threshold for ``combo``); its mask, the OR
+    of the kept blocks' bits, rides one literal array and ``band_key =
+    simhash & mask``, whatever the table count.
+
     The reference's in-memory ``std::vector<std::map<uint64,vector<int>>>``
     (``simhash.cpp:362``) disappears: a bucket is just a group of this frame.
     """
+    if scheme not in ("single", "combo"):
+        raise ValueError(scheme)
     # The explode below multiplies rows 8-56x, which the planner cannot see:
     # if AQE coalesced the upstream (tiny) frame to 1-2 partitions, the whole
     # band table + candidate join would run on 1-2 tasks (measured: 1.67M
@@ -74,27 +79,18 @@ def simhash_bands(sigs: DataFrame, cfg: DedupConfig = DEFAULT,
     # Re-expand ONLY when under-partitioned — see plans.partitions.
     from webdedup.plans.partitions import ensure_min_partitions
     sigs = ensure_min_partitions(sigs)
-    width = cfg.simhash_bits // cfg.simhash_bands
-    blocks = [_block(F.col("simhash"), i, width) for i in range(cfg.simhash_bands)]
-    if scheme == "single":
-        keys = [(t, blocks[t]) for t in range(cfg.simhash_bands)]
-    elif scheme == "combo":
-        n_keep = cfg.simhash_bands - cfg.hamming_threshold  # 3 blocks kept
-        keys = []
-        for t, combo in enumerate(combinations(range(cfg.simhash_bands), n_keep)):
-            key = F.lit(0).cast("long")
-            for j, bi in enumerate(combo):
-                key = key.bitwiseOR(F.shiftleft(blocks[bi], j * width))
-            keys.append((t, key))
-    else:
-        raise ValueError(scheme)
-    pairs = F.array(*[
-        F.struct(F.lit(t).alias("table_id"), k.cast("long").alias("band_key"))
-        for t, k in keys
-    ])
+    n_blocks = cfg.simhash_bands
+    width = cfg.simhash_bits // n_blocks
+    keep = 1 if scheme == "single" else n_blocks - cfg.hamming_threshold
+    block = (1 << width) - 1
+    masks = [to_signed64(sum(block << (i * width) for i in kept))
+             for kept in combinations(range(n_blocks), keep)]
     return (
-        sigs.select("id", "simhash", F.explode(pairs).alias("tb"))
-        .select("id", "simhash", "tb.table_id", "tb.band_key")
+        sigs.select("id", "simhash",
+                    F.posexplode(F.array(*map(F.lit, masks)))
+                    .alias("table_id", "mask"))
+        .select("id", "simhash", "table_id",
+                F.col("simhash").bitwiseAND(F.col("mask")).alias("band_key"))
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
+from webdedup.functions.hashing import to_signed64
 from webdedup.functions.signatures import vector_simhash_udf
 from webdedup.operators.bucket_scan import bucket_scan
 from webdedup.plans.partitions import ensure_min_partitions
@@ -377,18 +378,18 @@ def _lsh_blocked_verify(sig: DataFrame, id_type, threshold: float,
     """
     p_left = (probe_bits + 1) // 2
     p_right = probe_bits // 2
-    masks = _probe_masks(width, p_left)
-    structs = []
-    for t in range(bands):
-        key = (F.shiftrightunsigned(F.col("sig"), t * width)
-               .bitwiseAND(F.lit((1 << width) - 1)))
-        for m in masks:
-            structs.append(F.struct(
-                F.lit(t).alias("band_id"),
-                key.bitwiseXOR(F.lit(m)).alias("band_key"),
-                F.lit(bin(m).count("1") <= p_right).alias("ex")))
-    exploded = (sig.select("id", "vec", F.explode(F.array(*structs)).alias("tb"))
-                .select("id", "vec", "tb.band_id", "tb.band_key", "tb.ex"))
+    block = (1 << width) - 1
+    rows = [(t, to_signed64(block << (t * width)),
+             to_signed64(m << (t * width)), bin(m).count("1") <= p_right)
+            for t in range(bands) for m in _probe_masks(width, p_left)]
+    # one literal array per parameter, indexed by the exploded position
+    band_id, mask, probe, ex = (F.array(*map(F.lit, c)) for c in zip(*rows))
+    i = F.col("i")
+    exploded = (sig.select("id", "vec", "sig",
+                           F.posexplode(band_id).alias("i", "band_id"))
+                .select("id", "vec", "band_id",
+                        F.col("sig").bitwiseAND(mask[i]).bitwiseXOR(probe[i])
+                        .alias("band_key"), ex[i].alias("ex")))
     return (_blocked_cosine_pairs(exploded, ["band_id", "band_key"], id_type,
                                   threshold, max_bucket_rows)
             .withColumn("cosine", F.round("cosine", 6))

@@ -188,8 +188,8 @@ def run(
     if "minhash" in matchers:
         def _min():
             # stratified verify around the signature estimate
-            # (minhash_search.py:81-83), a cheap zip_with over signatures
-            # the join already carries.  σ = sqrt(t(1-t)/perms) ≈ 0.044:
+            # (minhash_search.py:81-83, Arrow ``signature_jaccard`` kernel).
+            # σ = sqrt(t(1-t)/perms) ≈ 0.044:
             # - est < t-3σ        -> discarded (prefilter; false discard of
             #   a true >=t pair is a 3σ event, recall gate pytest-covered)
             # - est >= t+3σ       -> accepted without exact verify (false
