@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from webdedup import oracle_sql as oracle_sql_mod
 from webdedup.config import DEFAULT as CFG
+from webdedup.functions.signatures import all_signatures
 from webdedup.operators import (
     exact, jaccard, minhash_lsh, simhash_lsh, substring, textstats, similarity,
 )
@@ -51,13 +52,16 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (SparkContext, sf_dir) — the executor-side analog of the pipeline's
 # materialized stage tables (SURVEY S4-S6 feature/index stores).
 #
-# r7 extends the same pattern one level down: the fused minhash-signature/
-# shingle-set frame (_sigsets) and the simhash/jaccard matcher pair frames
-# are stage tables too — jaccard_pairs IS the jaccard matcher of
-# cluster_assignments, simhash_pairs_combo IS its simhash matcher, and the
-# minhash views all read one signature pass.  Nothing persists across bench
-# invocations (reset_memo drops everything per attempt; every attempt
-# re-derives every frame from the parquet inputs).
+# The same pattern reaches one level down, as in plans.pipeline.run: _sigs
+# is the memo of ONE all-kinds all_signatures pass (simhash, minhash,
+# shingles, anchors), the analog of the pipeline's `signatures` stage
+# table, and every signature query and matcher below reads a projection of
+# it — the producer runs once per attempt, not once per consumer.  The
+# simhash/jaccard matcher pair frames are memoized too: jaccard_pairs IS
+# the jaccard matcher of cluster_assignments, simhash_pairs_combo IS its
+# simhash matcher.  Nothing persists across bench invocations (reset_memo
+# drops everything per attempt; every attempt re-derives every frame from
+# the parquet inputs).
 # ---------------------------------------------------------------------------
 
 _MEMO: dict[tuple[str, str, str], DataFrame] = {}
@@ -89,15 +93,11 @@ def reset_memo() -> None:
     _MEMO.clear()
 
 
-def _sigsets(s: SparkSession, d: str) -> DataFrame:
-    """(id, minhash, shingles) stage frame — the in-memory analog of the
-    pipeline's signature stage table (SURVEY S4-S6), shared by the minhash
-    and jaccard derived views (r7): ONE tokenize+md5 pass of the one
-    signature producer instead of one per consumer."""
-    from webdedup.functions.signatures import all_signatures
-    return _memo(s, d, "sigsets",
-                 lambda: all_signatures(_docs(s, d), CFG,
-                                        kinds=("minhash", "shingles")))
+def _sigs(s: SparkSession, d: str) -> DataFrame:
+    """(id, simhash, minhash, shingles, anchors) — the in-memory analog of
+    the pipeline's signature stage table (SURVEY S4-S6): ONE all-kinds pass
+    of the one signature producer, which every signature query projects."""
+    return _memo(s, d, "sigs", lambda: all_signatures(_docs(s, d), CFG))
 
 
 def _mh_band_cands(s: SparkSession, d: str) -> DataFrame:
@@ -108,7 +108,7 @@ def _mh_band_cands(s: SparkSession, d: str) -> DataFrame:
     candidate set ``minhash_lsh_pairs`` verifies.  Memoized (r7): one band
     self-join per attempt instead of one per consumer query."""
     def build() -> DataFrame:
-        sigs = _sigsets(s, d).select("id", "minhash")
+        sigs = _sigs(s, d).select("id", "minhash")
         return simhash_lsh.band_candidates(
             minhash_lsh.minhash_bands(sigs, CFG))
     return _memo(s, d, "mh_band_cands", build)
@@ -122,20 +122,21 @@ def _simhash_combo_pairs(s: SparkSession, d: str) -> DataFrame:
     Hamming ball (simhash_lsh module doc), so this IS the matcher's pair
     set (the driver pins both schemes to the same oracle twin)."""
     return _memo(s, d, "simhash_combo_pairs",
-                 lambda: simhash_lsh.simhash_pairs(
-                     _docs(s, d), cfg=CFG, scheme="combo"))
+                 lambda: simhash_lsh.blocked_hamming_pairs(
+                     simhash_lsh.simhash_bands(
+                         _sigs(s, d).select("id", "simhash"), CFG, "combo"),
+                     CFG.hamming_threshold))
 
 
 def _jaccard_edge_pairs(s: SparkSession, d: str) -> DataFrame:
     """(a, b, jaccard) at the config threshold/df-cap — the headline
     ``jaccard_pairs`` query (pre-rounding) and the Jaccard matcher inside
-    ``_matcher_edges`` (r7: shared via memo; shingle sets come from the
-    fused ``_sigsets`` frame instead of a second tokenize+md5 pass)."""
+    ``_matcher_edges`` (r7: shared via memo; shingle sets are the
+    ``_sigs`` projection)."""
     def build() -> DataFrame:
-        sets = _sigsets(s, d).select("id", "shingles")
         return jaccard.jaccard_all_pairs(
-            _docs(s, d), cfg=CFG, threshold=CFG.jaccard_threshold,
-            max_df=CFG.max_bucket_size, sets=sets)
+            _sigs(s, d).select("id", "shingles"), CFG,
+            threshold=CFG.jaccard_threshold, max_df=CFG.max_bucket_size)
     return _memo(s, d, "jaccard_edge_pairs", build)
 
 
@@ -242,38 +243,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["doc_fingerprint"] = lambda s, d: textstats.doc_fingerprint(_docs(s, d))
 
     # --- simhash (SURVEY P6/P9/J1/J2) ---
-    q["simhash64"] = lambda s, d: simhash_lsh.simhash_fingerprints(
-        _docs(s, d), cfg=CFG).select(F.col("id").alias("doc_id"), "simhash")
-    q["simhash_pairs"] = lambda s, d: simhash_lsh.simhash_pairs(
-        _docs(s, d), cfg=CFG)
+    q["simhash64"] = lambda s, d: _sigs(s, d).select(
+        F.col("id").alias("doc_id"), "simhash")
+    q["simhash_pairs"] = lambda s, d: simhash_lsh.blocked_hamming_pairs(
+        simhash_lsh.simhash_bands(
+            _sigs(s, d).select("id", "simhash"), CFG, "single"),
+        CFG.hamming_threshold)
     q["simhash_pairs_combo"] = _simhash_combo_pairs
 
     # --- shingles / jaccard (SURVEY P8/P11/J4/J6) ---
-    q["shingle_stats"] = lambda s, d: jaccard.shingle_sets(
-        _docs(s, d), cfg=CFG).select(
-            F.col("id").alias("doc_id"),
-            F.size("shingles").alias("n_shingles"))
+    q["shingle_stats"] = lambda s, d: _sigs(s, d).select(
+        F.col("id").alias("doc_id"), F.size("shingles").alias("n_shingles"))
     # df-capped candidate generation + exact-J verify over full sets; the
     # DuckDB twin carries the SAME cap (oracle_sql._jacc_ctes), so the
     # engines agree by construction on any corpus, not by fixture luck
     q["jaccard_pairs"] = lambda s, d: _jaccard_edge_pairs(s, d).withColumn(
         "jaccard", F.round("jaccard", 6))
-    q["minhash_sig"] = lambda s, d: minhash_lsh.minhash_signatures(
-        _docs(s, d), cfg=CFG).select(
-            F.col("id").alias("doc_id"),
-            F.posexplode("minhash").alias("perm_id", "sig_value"))
+    q["minhash_sig"] = lambda s, d: _sigs(s, d).select(
+        F.col("id").alias("doc_id"),
+        F.posexplode("minhash").alias("perm_id", "sig_value"))
     # banded LSH candidates -> exact-verified pairs.  Oracle-checked after
     # all: the seeded perms are inlined in SQL and banding is slice equality.
-    # r7: signatures + shingle sets ride the fused _sigsets stage frame —
-    # one tokenize+md5 pass shared with the jaccard/est derived views
+    # signatures + shingle sets are _sigs projections — one signature pass
+    # shared with the jaccard/est derived views
     def _mh_pairs(s: SparkSession, d: str) -> DataFrame:
-        ss = _sigsets(s, d)
+        ss = _sigs(s, d)
         return minhash_lsh.minhash_edges(
-            _docs(s, d), cfg=CFG, threshold=CFG.jaccard_threshold,
-            sigs=ss.select("id", "minhash"),
-            sets=ss.select("id", "shingles"),
-            cands=_mh_band_cands(s, d)).withColumn(
-                "jaccard", F.round("jaccard", 6))
+            ss.select("id", "minhash"), ss.select("id", "shingles"), CFG,
+            threshold=CFG.jaccard_threshold, cands=_mh_band_cands(s, d),
+        ).withColumn("jaccard", F.round("jaccard", 6))
 
     q["minhash_lsh_pairs"] = _mh_pairs
     # the r5 identical-set collapse as its own driver-gated row: SAME twin
@@ -281,20 +279,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # a hash mismatch here would catch any future drift in the rep-expand
     # path without perturbing the timed headline query above
     def _mh_pairs_collapsed(s: SparkSession, d: str) -> DataFrame:
-        ss = _sigsets(s, d)
+        ss = _sigs(s, d)
         return minhash_lsh.minhash_edges(
-            _docs(s, d), cfg=CFG, threshold=CFG.jaccard_threshold,
-            sigs=ss.select("id", "minhash"),
-            sets=ss.select("id", "shingles"),
-            collapse_identical=True).withColumn(
-                "jaccard", F.round("jaccard", 6))
+            ss.select("id", "minhash"), ss.select("id", "shingles"), CFG,
+            threshold=CFG.jaccard_threshold, collapse_identical=True,
+        ).withColumn("jaccard", F.round("jaccard", 6))
 
     q["minhash_lsh_pairs_collapsed"] = _mh_pairs_collapsed
 
     # signature-estimate Jaccard re-rank over the banded candidates — the
     # reference's re-rank metric (minhash_search.py:81-83), oracle-checked
     def _est_jaccard(s: SparkSession, d: str) -> DataFrame:
-        sigs = _sigsets(s, d).select("id", "minhash")
+        sigs = _sigs(s, d).select("id", "minhash")
         # r7: the banded candidate frame is the memoized _mh_band_cands —
         # shared with minhash_lsh_pairs instead of re-running the band join
         return minhash_lsh.signature_jaccard(
@@ -305,7 +301,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- substring / suffix pass ---
     q["substring_pairs"] = lambda s, d: substring.substring_pairs(
-        _docs(s, d), cfg=CFG)
+        _sigs(s, d).select("id", F.explode("anchors").alias("anchor")))
 
     # --- clustering + representatives (SURVEY C1/W1) ---
     # both derive from the memoized checkpointed assignment frame: the CC
@@ -373,7 +369,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- LSH index stats + median heuristic (SURVEY A6/A8) ---
     def _band_stats(s: SparkSession, d: str) -> DataFrame:
-        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d), cfg=CFG)
+        sigs = _sigs(s, d).select("id", "simhash")
         bands = simhash_lsh.simhash_bands(sigs, CFG, scheme="single")
         buckets = bands.groupBy("table_id", "band_key").agg(
             F.count(F.lit(1)).alias("bsz"))
@@ -385,7 +381,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["simhash_band_stats"] = _band_stats
 
     def _median_heuristic(s: SparkSession, d: str) -> DataFrame:
-        sigs = simhash_lsh.simhash_fingerprints(_docs(s, d), cfg=CFG)
+        sigs = _sigs(s, d).select("id", "simhash")
         bands = simhash_lsh.simhash_bands(sigs, CFG, scheme="single")
         cands = simhash_lsh.band_candidates(bands)
         sa = sigs.select(F.col("id").alias("a"), F.col("simhash").alias("sig_a"))

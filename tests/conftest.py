@@ -55,3 +55,15 @@ def docs(pages):
     d = pages.select(F.col("url").alias("doc_id"), "text").cache()
     d.count()
     return d
+
+
+@pytest.fixture(scope="session")
+def doc_sigs(docs):
+    """All-kinds signature frame of ``docs``, materialized once: matcher
+    tests pass its projections, as ``plans.pipeline.run`` passes projections
+    of its ``signatures`` stage table."""
+    from webdedup.functions.signatures import all_signatures
+
+    s = all_signatures(docs, CFG).cache()
+    s.count()
+    return s

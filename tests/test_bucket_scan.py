@@ -101,10 +101,10 @@ def test_lsh_cosine_blocked_equals_fold_across_batches(spark):
     assert blocked == fold and len(fold) > 0
 
 
-def test_simhash_edges_blocked_default_components(docs, corpus_texts):
+def test_simhash_edges_blocked_default_components(doc_sigs, corpus_texts):
     """simhash_edges yields the same components as brute force."""
     from webdedup import oracle
-    e = simhash_lsh.simhash_edges(docs, cfg=CFG)
+    e = simhash_lsh.simhash_edges(doc_sigs.select("id", "simhash"), CFG)
     got = {(r["a"], r["b"]) for r in e.collect()}
     ids = sorted(corpus_texts)
     exp = oracle.simhash_pairs(corpus_texts, CFG)

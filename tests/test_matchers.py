@@ -12,11 +12,22 @@ from pyspark.sql import functions as F
 from webdedup import oracle
 from webdedup.config import DEFAULT as CFG
 from webdedup.functions.hashing import to_signed64
+from webdedup.functions.signatures import all_signatures
 from webdedup.operators import exact, jaccard, minhash_lsh, simhash_lsh, substring
 
 
 def _pairset(df, a="a", b="b"):
     return {(r[a], r[b]) for r in df.select(a, b).collect()}
+
+
+def _mh(sigs):
+    """The (signatures, shingle sets) frames ``minhash_edges`` takes."""
+    return sigs.select("id", "minhash"), sigs.select("id", "shingles")
+
+
+def _anchors(sigs):
+    """The (id, anchor) index ``substring_pairs`` takes."""
+    return sigs.select("id", F.explode("anchors").alias("anchor"))
 
 
 def test_exact_edges_match_oracle(docs, corpus_texts):
@@ -98,16 +109,17 @@ def test_band_tables_pinned(docs, bands):
     assert largest >= 2, "no bucket with two members: the check is vacuous"
 
 
-def test_jaccard_all_pairs_equals_bruteforce(docs, corpus_texts):
+def test_jaccard_all_pairs_equals_bruteforce(doc_sigs, corpus_texts):
     got = _pairset(jaccard.jaccard_all_pairs(
-        docs, cfg=CFG, threshold=CFG.jaccard_threshold))
+        doc_sigs.select("id", "shingles"), CFG,
+        threshold=CFG.jaccard_threshold))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert got == exp
 
 
-def test_minhash_banding_recall(docs, corpus_texts):
+def test_minhash_banding_recall(doc_sigs, corpus_texts):
     got = _pairset(minhash_lsh.minhash_edges(
-        docs, cfg=CFG, threshold=CFG.jaccard_threshold))
+        *_mh(doc_sigs), CFG, threshold=CFG.jaccard_threshold))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert got <= exp, "verify step must keep only true >=threshold pairs"
     # overall recall: 32x4 banding at J~0.5 misses ~13% by design (the
@@ -120,17 +132,17 @@ def test_minhash_banding_recall(docs, corpus_texts):
     assert recall_high >= 0.99, f"minhash recall@J>=0.7 {recall_high:.3f}"
 
 
-def test_substring_pairs_equal_bruteforce(docs, corpus_texts):
-    got = _pairset(substring.substring_pairs(docs, cfg=CFG))
+def test_substring_pairs_equal_bruteforce(doc_sigs, corpus_texts):
+    got = _pairset(substring.substring_pairs(_anchors(doc_sigs)))
     exp = oracle.substring_pairs(corpus_texts, CFG)
     assert got == exp
 
 
-def test_substring_variant_detected(docs, pages):
+def test_substring_variant_detected(doc_sigs, pages):
     """Every present substring-kind page must pair with its base."""
     subs = {r["url"]: r["group_id"] for r in
             pages.filter(F.col("kind") == "substring").collect()}
-    got = _pairset(substring.substring_pairs(docs, cfg=CFG))
+    got = _pairset(substring.substring_pairs(_anchors(doc_sigs)))
     linked = {a for a, _ in got} | {b for _, b in got}
     missing = [u for u in subs if u not in linked]
     assert not missing, f"substring variants not linked: {missing[:5]}"
@@ -237,12 +249,13 @@ def test_lsh_cosine_zero_norm_and_threshold_contract(spark):
         similarity.lsh_cosine_pairs(emb, threshold=0.0, cfg=CFG)
 
 
-def test_minhash_est_prefilter_keeps_recall(docs, corpus_texts):
+def test_minhash_est_prefilter_keeps_recall(doc_sigs, corpus_texts):
     """Signature-estimate prefilter (minhash_search.py:81-83) 3σ under the
     verify threshold must not change what survives the exact verify where
     banding is reliable (J>=0.7)."""
     got = _pairset(minhash_lsh.minhash_edges(
-        docs, cfg=CFG, threshold=CFG.jaccard_threshold, est_prefilter=0.35))
+        *_mh(doc_sigs), CFG, threshold=CFG.jaccard_threshold,
+        est_prefilter=0.35))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert got <= exp
     high = oracle.jaccard_pairs(corpus_texts, 0.7, CFG)
@@ -250,12 +263,12 @@ def test_minhash_est_prefilter_keeps_recall(docs, corpus_texts):
     assert recall_high >= 0.99, f"est-prefilter recall@J>=0.7 {recall_high:.3f}"
 
 
-def test_minhash_fast_accept_stratification(docs, corpus_texts):
+def test_minhash_fast_accept_stratification(doc_sigs, corpus_texts):
     """fast_accept must only ADD pairs (est >= cutoff, skipping the exact
     verify) relative to the exact-verify edge set — never lose one."""
     kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold, est_prefilter=0.37)
-    base = minhash_lsh.minhash_edges(docs, **kw)
-    fast = minhash_lsh.minhash_edges(docs, fast_accept=0.633, **kw)
+    base = minhash_lsh.minhash_edges(*_mh(doc_sigs), **kw)
+    fast = minhash_lsh.minhash_edges(*_mh(doc_sigs), fast_accept=0.633, **kw)
     # exact mode has no flag column; fast-accept mode marks every row so
     # consumers can tell estimate-valued scores from exact ones (ADVICE r3)
     assert "estimated" not in base.columns
@@ -266,21 +279,20 @@ def test_minhash_fast_accept_stratification(docs, corpus_texts):
                fast.filter("estimated").select("a", "b").collect()}
     assert flagged >= (fs - bs), "un-flagged estimate row escaped"
     if fs - bs:
-        from pyspark.sql import functions as F
-        sigs = minhash_lsh.minhash_signatures(docs, cfg=CFG)
-        extra = docs.sparkSession.createDataFrame(
+        extra = doc_sigs.sparkSession.createDataFrame(
             sorted(fs - bs), "a string, b string")
-        est = minhash_lsh.signature_jaccard(extra, sigs)
+        est = minhash_lsh.signature_jaccard(extra, _mh(doc_sigs)[0])
         low = est.filter(F.col("est_jaccard") < 0.633).count()
         assert low == 0, "fast-accepted pair below the acceptance cutoff"
 
 
-def test_jaccard_max_df_cap_equivalent_here(docs, corpus_texts):
+def test_jaccard_max_df_cap_equivalent_here(doc_sigs, corpus_texts):
     """df-capped candidate generation + full-set verify: identical results
     on data whose max shingle df is far below the cap (values are exact by
     construction; only recall could differ, and here it does not)."""
     capped = _pairset(jaccard.jaccard_all_pairs(
-        docs, cfg=CFG, threshold=CFG.jaccard_threshold,
+        doc_sigs.select("id", "shingles"), CFG,
+        threshold=CFG.jaccard_threshold,
         max_df=CFG.max_bucket_size))
     exp = oracle.jaccard_pairs(corpus_texts, CFG.jaccard_threshold, CFG)
     assert capped == exp
@@ -298,9 +310,10 @@ def test_jaccard_max_df_cap_drops_only_boilerplate_pairs(spark):
              "r2": "zeta eta theta iota kappa mu"}
     docs = spark.createDataFrame(sorted(texts.items()),
                                  "doc_id string, text string")
+    sets = jaccard.shingle_sets(docs, cfg=CFG).cache()
 
     def triples(max_df):
-        got = jaccard.jaccard_all_pairs(docs, cfg=CFG, threshold=0.3,
+        got = jaccard.jaccard_all_pairs(sets, CFG, threshold=0.3,
                                         max_df=max_df)
         return {(r["a"], r["b"], r["jaccard"]) for r in got.collect()}
 
@@ -336,7 +349,7 @@ def test_ivf_cosine_recall(spark):
     assert full == exact_pairs
 
 
-def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
+def test_minhash_collapse_identical_bit_identical(doc_sigs):
     """VERDICT r4 #4: collapse_identical pre-collapses identical-shingle-set
     docs before banding.  The fixture corpus plants exact duplicates (base/
     exact slots + the 40-clone boilerplate group), so the collapse engages;
@@ -346,38 +359,36 @@ def test_minhash_collapse_identical_bit_identical(docs, corpus_texts):
         return {tuple(r) for r in frame.collect()}
 
     kw = dict(cfg=CFG, threshold=CFG.jaccard_threshold)
-    base = minhash_lsh.minhash_edges(docs, **kw)
-    coll = minhash_lsh.minhash_edges(docs, collapse_identical=True, **kw)
+    base = minhash_lsh.minhash_edges(*_mh(doc_sigs), **kw)
+    coll = minhash_lsh.minhash_edges(*_mh(doc_sigs), collapse_identical=True,
+                                     **kw)
     assert base.columns == coll.columns
     b, c = rowset(base), rowset(coll)
     assert b == c, (len(b), len(c), list(b - c)[:3], list(c - b)[:3])
     assert b, "fixture must produce pairs (vacuous otherwise)"
 
     fkw = dict(est_prefilter=0.37, fast_accept=0.633, **kw)
-    fbase = minhash_lsh.minhash_edges(docs, **fkw)
-    fcoll = minhash_lsh.minhash_edges(docs, collapse_identical=True, **fkw)
+    fbase = minhash_lsh.minhash_edges(*_mh(doc_sigs), **fkw)
+    fcoll = minhash_lsh.minhash_edges(*_mh(doc_sigs), collapse_identical=True,
+                                      **fkw)
     assert fbase.columns == fcoll.columns  # incl. the estimated flag
     fb, fc = rowset(fbase), rowset(fcoll)
     assert fb == fc, (len(fb), len(fc), list(fb - fc)[:3], list(fc - fb)[:3])
     # the collapse actually engaged: fewer docs survive to the rep level
-    import pyspark.sql.functions as SF
-    from webdedup.operators.jaccard import shingle_sets
-    sets = shingle_sets(docs, cfg=CFG)
-    n_classes = (sets.select(SF.xxhash64(SF.array_sort("shingles")))
+    n_classes = (doc_sigs.select(F.xxhash64(F.array_sort("shingles")))
                  .distinct().count())
-    assert n_classes < docs.count()
+    assert n_classes < doc_sigs.count()
 
 
-def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
+def test_simhash_confirm_jaccard_dial(docs, doc_sigs, corpus_texts):
     """SimHash precision dial (r5, motivated by the measured 250k chained
     component): confirmed edge set must equal {SimHash pairs} ∩ {exact
     Jaccard >= conf} per the local brute-force oracles, at a low conf that
     keeps everything here and a high conf that demonstrably drops the
     heavier-edited variants."""
-    from webdedup.functions.signatures import all_signatures
     from webdedup.operators.jaccard import jaccard_verify
 
-    sigs = all_signatures(docs, cfg=CFG).localCheckpoint()
+    sigs = doc_sigs
     pairs = simhash_lsh.simhash_pairs(docs, cfg=CFG)
     exp_sim = oracle.simhash_pairs(corpus_texts, CFG)
     assert _pairset(pairs) == exp_sim
@@ -394,26 +405,22 @@ def test_simhash_confirm_jaccard_dial(docs, corpus_texts):
     # pipeline semantics: the dial filters the STAR-COLLAPSED edge list
     # (simhash_edges), so each surviving edge is individually confirmed;
     # an identical-fingerprint class re-splits by overlap with its rep
-    e = simhash_lsh.simhash_edges(
-        None, cfg=CFG, sigs=sigs.select("id", "simhash"))
+    e = simhash_lsh.simhash_edges(sigs.select("id", "simhash"), CFG)
     conf_edges = _pairset(jaccard_verify(
         e.select("a", "b"), sigs.select("id", "shingles"), 0.3))
     full = exp_sim & oracle.jaccard_pairs(corpus_texts, 0.3, CFG)
     assert conf_edges <= full, "confirmed edge admits an unconfirmed pair"
 
 
-def test_simhash_confirm_est_mode_agreement(docs, corpus_texts):
+def test_simhash_confirm_est_mode_agreement(doc_sigs, corpus_texts):
     """'est' confirmation (signature-estimate, the near-free 10^12-doc
     mode): must agree with exact confirmation outside the estimator's
     noise band — every SimHash edge with exact J >= conf+margin is kept,
     every one with exact J < conf-margin is dropped (margin ≈ 3σ of the
     128-perm estimator).  Deterministic for the seeded perms, so this is
     a hard assertion, not a flaky probabilistic one."""
-    from webdedup.functions.signatures import all_signatures
-
-    sigs = all_signatures(docs, cfg=CFG).localCheckpoint()
-    e = simhash_lsh.simhash_edges(
-        None, cfg=CFG, sigs=sigs.select("id", "simhash"))
+    sigs = doc_sigs
+    e = simhash_lsh.simhash_edges(sigs.select("id", "simhash"), CFG)
     edge_set = _pairset(e)
     conf, margin = 0.3, 0.15
     est = minhash_lsh.signature_jaccard(
@@ -444,15 +451,16 @@ def test_minhash_empty_docs_never_pair(spark):
             ("b1", "completely unrelated text about spark catalyst plans "
                    "and shuffle partitions in a distributed engine")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    sigs = all_signatures(docs, CFG).cache()
 
     def rowset(frame):
         return {tuple(r) for r in frame.collect()}
 
     for kw in (dict(),  # exact-verify mode
                dict(est_prefilter=0.2, fast_accept=0.6)):  # production mode
-        base = minhash_lsh.minhash_edges(docs, cfg=CFG, threshold=0.3, **kw)
+        base = minhash_lsh.minhash_edges(*_mh(sigs), CFG, threshold=0.3, **kw)
         coll = minhash_lsh.minhash_edges(
-            docs, cfg=CFG, threshold=0.3, collapse_identical=True, **kw)
+            *_mh(sigs), CFG, threshold=0.3, collapse_identical=True, **kw)
         b, c = rowset(base), rowset(coll)
         assert b == c, (kw, b ^ c)
         ids = {x for r in b for x in (r[0], r[1])}
@@ -468,8 +476,6 @@ def test_minhash_precomputed_cands_identical(spark):
     empty/whitespace docs (whose sentinel signatures band-collide in the raw
     frame but are anti-joined out; band collisions are pairwise, so no other
     pair is affected)."""
-    from webdedup.functions.signatures import all_signatures
-
     rows = [("e1", ""), ("e2", "   \n\t "),
             ("a1", "the quick brown fox jumps over the lazy dog again and "
                    "again until the dog finally moves away from the gate"),
@@ -486,10 +492,9 @@ def test_minhash_precomputed_cands_identical(spark):
         minhash_lsh.minhash_bands(sigs, CFG))
     # raw frame must actually contain sentinel pairs for the test to bite
     assert ("e1", "e2") in _pairset(cands)
-    base = minhash_lsh.minhash_edges(
-        docs, cfg=CFG, threshold=0.3, sigs=sigs, sets=sets)
-    pre = minhash_lsh.minhash_edges(
-        docs, cfg=CFG, threshold=0.3, sigs=sigs, sets=sets, cands=cands)
+    base = minhash_lsh.minhash_edges(sigs, sets, CFG, threshold=0.3)
+    pre = minhash_lsh.minhash_edges(sigs, sets, CFG, threshold=0.3,
+                                    cands=cands)
     assert {tuple(r) for r in base.collect()} == \
            {tuple(r) for r in pre.collect()}
     assert ("a1", "a2") in _pairset(pre)

@@ -42,6 +42,23 @@ def result(spark, pages, work_dir):
                         truth_pairs=truth)
 
 
+def test_stage_tables_read_back_spread(spark, result, work_dir):
+    """Every stage table holding at least ``par`` rows reads back with at
+    least ``par`` = defaultParallelism partitions: ``checkpoint.write``
+    writes ``par`` files and the scan keeps them apart, so the stages
+    downstream of a read need no partition guard.  A scan that packed the
+    small files into fewer partitions (PLANS.md §10) fails here."""
+    par = spark.sparkContext.defaultParallelism
+    checked = []
+    for name, n_rows in result.stage_rows.items():
+        if n_rows >= par:
+            n = checkpoint.read(spark, work_dir, name).rdd.getNumPartitions()
+            assert n >= par, (name, n_rows, n)
+            checked.append(name)
+    assert {"documents", "signatures", "assignments"} <= set(checked), \
+        checked
+
+
 def test_recall_gate(result, corpus_texts):
     """Dup-pair recall >= 0.99 vs the reference-semantics oracle (north_rule).
     In practice the pipeline reproduces the oracle partition exactly.  The

@@ -122,7 +122,9 @@ def test_simhash_matcher_follows_cfg_tokenizer(spark):
     assert got != fps(simhash_lsh.simhash_fingerprints(docs, cfg=CFG))
     assert pairs(simhash_lsh.simhash_pairs(docs, cfg=alnum)) == {("c", "d")}
     assert pairs(simhash_lsh.simhash_pairs(docs, cfg=CFG)) == set()
-    assert pairs(simhash_lsh.simhash_edges(docs, cfg=alnum)) == {("c", "d")}
+    assert pairs(simhash_lsh.simhash_edges(
+        simhash_lsh.simhash_fingerprints(docs, cfg=alnum), alnum)) == {
+            ("c", "d")}
 
 
 def test_pipeline_runs_with_registered_nondefault_schemes(spark):

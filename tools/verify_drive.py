@@ -74,7 +74,8 @@ try:
         [("u1", "",), ("u2", " "), ("u3", "tok")], "doc_id string, text string")
     from webdedup.operators import simhash_lsh, jaccard
     n = simhash_lsh.simhash_fingerprints(deg).count()
-    j = jaccard.jaccard_all_pairs(deg, cfg=CFG, max_df=5).count()
+    j = jaccard.jaccard_all_pairs(
+        jaccard.shingle_sets(deg, cfg=CFG), CFG, max_df=5).count()
     print("degenerate ok:", n == 3, "jac pairs:", j)
     assert gp == ep, "PARTITION MISMATCH"
     assert rep.get("eval/recall", 0) >= 0.99

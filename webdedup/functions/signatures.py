@@ -3,10 +3,14 @@ and vector SimHash.
 
 ``all_signatures(df, cfg, kinds=...)`` is the ONE producer of text
 signatures: a single ``mapInPandas`` pass that tokenizes each document once
-and computes only the requested kinds.  Every operator that needs a text
-signature (``simhash_fingerprints``, ``minhash_signatures``,
-``jaccard.shingle_sets``, ``substring.anchor_index``, the pipeline's
-``signatures`` stage, the entry's signature memo) is a projection of it.
+and computes only the requested kinds.  Callers run it once and hand its
+frames on: the pipeline's ``signatures`` stage and the entry's signature
+memo each make one all-kinds pass, and the matchers (``simhash_edges``,
+``minhash_edges``, ``jaccard_all_pairs``, ``substring_pairs``) take
+projections of that pass and never call it.  The per-kind helpers
+``simhash_fingerprints``, ``minhash_signatures``, ``jaccard.shingle_sets``
+and ``substring.anchor_index`` are projections of it for callers that start
+from text.
 The other members of this module are the streaming column form
 ``simhash64_udf`` (a projection that keeps a stream's other columns), the
 local references ``_simhash_of_text`` / ``_minhash_of_text`` that the

@@ -10,10 +10,11 @@ with one pair-generation plan and one verify kernel:
 
 - ``jaccard_verify``    — for an existing candidate-pair frame: join shingle
   *sets* to both sides and count |A n B| with a vectorized numpy kernel.
-- ``jaccard_all_pairs`` — exact all-pairs: explode (doc, shingle-hash), drop
-  shingles above the document-frequency cap ``max_df`` (``None`` = no
-  cap), self-join on shingle-hash for the distinct candidate pairs, then
-  ``jaccard_verify`` them.  Any pair with J > 0 shares >= 1 shingle, so
+- ``jaccard_all_pairs`` — exact all-pairs over the caller's (id, shingles)
+  frame: explode (doc, shingle-hash), drop shingles above the
+  document-frequency cap ``max_df`` (``None`` = no cap), self-join on
+  shingle-hash for the distinct candidate pairs, then ``jaccard_verify``
+  them.  Any pair with J > 0 shares >= 1 shingle, so
   uncapped recall is exactly 1.0 — the DuckDB-oracle-matched operator.
   The cap is the web-scale escape hatch for stopword shingles.
 """
@@ -58,11 +59,9 @@ def shingle_sets(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def jaccard_all_pairs(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", cfg: DedupConfig = DEFAULT,
+def jaccard_all_pairs(sets: DataFrame, cfg: DedupConfig = DEFAULT,
                       threshold: float | None = None,
-                      max_df: int | None = None,
-                      sets: DataFrame | None = None) -> DataFrame:
+                      max_df: int | None = None) -> DataFrame:
     """(a, b, jaccard) for every pair with J >= threshold — exact values.
 
     Candidate pairs are the distinct pairs sharing a shingle whose document
@@ -76,11 +75,12 @@ def jaccard_all_pairs(df: DataFrame, id_col: str = "doc_id",
     ultra-common shingles are missed.  On the sf0.01 oracle data max
     shingle df = 3, so capped and uncapped results coincide and the
     uncapped DuckDB twin still matches.
+
+    ``sets`` is the caller's materialized (id, shingles) frame, a
+    projection of its one ``all_signatures`` pass; the shingle index and
+    the verify join both read it.
     """
     t = cfg.jaccard_threshold if threshold is None else threshold
-    if sets is None:
-        sets = shingle_sets(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)  # shared by the index + the verify join
     idx = sets.select("id", F.explode("shingles").alias("sh"))
     if max_df is not None:
         from pyspark.sql import Window

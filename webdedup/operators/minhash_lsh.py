@@ -12,6 +12,11 @@ catching a pair with Jaccard J is 1-(1-J^r)^b: ~0.974 at J=0.3,
 1 - 5e-8 at J=0.8 — so at the fixture similarity levels recall is ~1.0
 while the oracle-exact path (``webdedup.operators.jaccard``) covers the
 SQL-checkable semantics.
+
+``minhash_edges`` takes the caller's signature and shingle-set frames (the
+pipeline's signature stage table, the entry's signature memo) and derives
+no signature itself; ``without_empty_docs`` is the one filter that drops
+pairs touching an empty-token document.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig, DEFAULT
+from webdedup.functions.hashing import MERSENNE61
 from webdedup.functions.signatures import all_signatures
 from webdedup.operators.jaccard import jaccard_verify
 from webdedup.operators.simhash_lsh import band_candidates
@@ -89,11 +95,26 @@ def signature_jaccard(cands: DataFrame, sigs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
-                  text_col: str = "text", cfg: DedupConfig = DEFAULT,
+def _empty_sig():
+    return F.element_at("minhash", 1) == F.lit(MERSENNE61)
+
+
+def without_empty_docs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """``pairs`` (a, b, ...) minus every pair touching a doc whose
+    ``minhash`` is the empty-token sentinel (MERSENNE61 at every position —
+    ``signatures.all_signatures``).  Two such docs (e.g. "" and "  ") agree
+    on every signature position, so an estimate scores them 1.0 although
+    they share no token.  Two left-anti joins against the (tiny) sentinel-id
+    frame; AQE turns them into broadcast anti-joins at runtime."""
+    empty_ids = sigs.filter(_empty_sig()).select("id")
+    return (pairs
+            .join(empty_ids.withColumnRenamed("id", "a"), "a", "left_anti")
+            .join(empty_ids.withColumnRenamed("id", "b"), "b", "left_anti"))
+
+
+def minhash_edges(sigs: DataFrame, sets: DataFrame,
+                  cfg: DedupConfig = DEFAULT,
                   threshold: float | None = None,
-                  sigs: DataFrame | None = None,
-                  sets: DataFrame | None = None,
                   est_prefilter: float | None = None,
                   fast_accept: float | None = None,
                   collapse_identical: bool = False,
@@ -131,10 +152,10 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     (default) for exact-verify semantics (no ``estimated`` column) — the
     oracle-checked ``minhash_lsh_pairs`` query never sets it.
 
-    ``sigs``/``sets``: optional materialized signature / shingle-set tables
-    (stage tables in the pipeline).  Whichever is missing comes from ONE
-    ``all_signatures`` pass over ``df``, lazily checkpointed so it does not
-    execute once per join arm.
+    ``sigs``/``sets``: the caller's materialized (id, minhash) signature
+    and (id, shingles) shingle-set frames — projections of its one
+    ``all_signatures`` pass (the pipeline's signature stage table, the
+    entry's signature memo), so no join arm re-runs the signature UDF.
 
     ``cands``: optional PRECOMPUTED banded candidate frame (a, b) built over
     the RAW signature table — ``band_candidates(minhash_bands(sigs))``,
@@ -168,17 +189,6 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     NULL and is dropped.
     """
     t = cfg.minhash_threshold if threshold is None else threshold
-    missing = tuple(kind for kind, frame in (("minhash", sigs),
-                                             ("shingles", sets))
-                    if frame is None)
-    if missing:
-        # ONE signature pass computes whichever of the two stage frames was
-        # not supplied; lazy checkpoint: the pass would otherwise run once
-        # per join arm
-        fused = all_signatures(df, cfg, id_col, text_col, kinds=missing
-                               ).localCheckpoint(eager=False)
-        sigs = fused.select("id", "minhash") if sigs is None else sigs
-        sets = fused.select("id", "shingles") if sets is None else sets
     # Empty-shingle-set docs carry the sentinel signature (MERSENNE61 at
     # every position — signatures.all_signatures).  They can never survive the
     # exact verify (empty vs anything is J = 0 or 0/0 -> NULL, both dropped),
@@ -191,8 +201,6 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     # crawl would otherwise produce.  Only degenerate threshold 0.0
     # could notice (empty-vs-nonempty J=0 pairs — which banding essentially
     # never surfaces as candidates anyway).
-    from webdedup.functions.hashing import MERSENNE61
-    sentinel = F.element_at("minhash", 1) == F.lit(MERSENNE61)
     if cands is not None:
         if collapse_identical:
             raise ValueError(
@@ -200,17 +208,12 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
                 "supported with collapse_identical=False")
         # the frame was banded over the RAW signature table; restrict to
         # non-sentinel docs (see docstring: pairwise collisions make this
-        # exactly the filtered-table pair set).  AQE turns these into
-        # broadcast anti-joins at runtime when the empty-id set is small.
-        empty_ids = sigs.filter(sentinel).select("id")
-        cands = (cands
-                 .join(empty_ids.withColumnRenamed("id", "a"), "a", "left_anti")
-                 .join(empty_ids.withColumnRenamed("id", "b"), "b", "left_anti"))
-    sigs = sigs.filter(~sentinel)
+        # exactly the filtered-table pair set)
+        cands = without_empty_docs(cands, sigs)
+    sigs = sigs.filter(~_empty_sig())
     if collapse_identical:
         return _collapsed_minhash_edges(
-            df, id_col, text_col, cfg, t, sigs, sets, est_prefilter,
-            fast_accept)
+            cfg, t, sigs, sets, est_prefilter, fast_accept)
     if cands is None:
         cands = band_candidates(minhash_bands(sigs, cfg))
     if est_prefilter is not None or fast_accept is not None:
@@ -232,8 +235,7 @@ def minhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     return jaccard_verify(cands, sets, t)
 
 
-def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
-                             text_col: str, cfg: DedupConfig, t: float,
+def _collapsed_minhash_edges(cfg: DedupConfig, t: float,
                              sigs: DataFrame, sets: DataFrame,
                              est_prefilter: float | None,
                              fast_accept: float | None,
@@ -260,9 +262,8 @@ def _collapsed_minhash_edges(df: DataFrame | None, id_col: str,
     )
     reps_ids = members.filter(F.col("id") == F.col("rep")).select("id")
     rep_pairs = minhash_edges(
-        df, id_col, text_col, cfg, t,
-        sigs=sigs.join(reps_ids, "id", "left_semi"),
-        sets=sets.join(reps_ids, "id", "left_semi"),
+        sigs.join(reps_ids, "id", "left_semi"),
+        sets.join(reps_ids, "id", "left_semi"), cfg, t,
         est_prefilter=est_prefilter, fast_accept=fast_accept)
 
     value_cols = [c for c in rep_pairs.columns if c not in ("a", "b")]

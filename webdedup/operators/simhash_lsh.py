@@ -210,9 +210,7 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                                  cfg.hamming_threshold)
 
 
-def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
-                  text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                  sigs: DataFrame | None = None) -> DataFrame:
+def simhash_edges(sigs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
     """Scale path for the pipeline: (a, b) edges, banded with ``combo``.
 
     Docs are first collapsed to *distinct fingerprints* (exact clones and
@@ -222,13 +220,10 @@ def simhash_edges(df: DataFrame | None, id_col: str = "doc_id",
     verified inside each bucket (``blocked_hamming_pairs``).  Edge set is
     equivalent for connected components.
 
-    ``sigs``: optional materialized (id, simhash) stage table; strongly
-    recommended — it keeps the signature UDF out of the self-join plan.
+    ``sigs``: the caller's materialized (id, simhash) frame (the pipeline's
+    signature stage table), which keeps the signature UDF out of the
+    self-join plan.
     """
-    if sigs is None:
-        # lazy checkpoint: keep the UDF out of the multi-arm join plan
-        sigs = simhash_fingerprints(df, id_col, text_col, cfg).localCheckpoint(
-            eager=False)
     w = Window.partitionBy("simhash")
     tagged = sigs.withColumn("rep", F.min("id").over(w))
     clone_edges = (

@@ -18,7 +18,9 @@ semantics; the scalable equivalent is **content-defined anchor sampling**
    ``n_shared >= 2`` evidences a run of ~>= 2*mod+K tokens).
 
 The sampled fingerprints are the ``anchors`` kind of the one signature
-pass (``functions.signatures.all_signatures``); the pair search is a native
+pass (``functions.signatures.all_signatures``).  ``substring_pairs`` takes
+the caller's (id, anchor) index, exploded from its signature frame
+(``anchor_index`` derives one from text); the pair search is a native
 Catalyst equi-join + count.  The DuckDB twin ``oracle_sql.substring_pairs``
 recomputes the anchors in SQL, so this operator is oracle-checked exactly.
 """
@@ -40,24 +42,16 @@ def anchor_index(df: DataFrame, id_col: str = "doc_id",
             .select("id", F.explode("anchors").alias("anchor")))
 
 
-def substring_pairs(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", cfg: DedupConfig = DEFAULT,
-                    min_anchors: int = 2,
+def substring_pairs(idx: DataFrame, min_anchors: int = 2,
                     max_df: int | None = None) -> DataFrame:
     """(a, b, n_shared) — pairs sharing >= min_anchors sampled fingerprints.
 
-    ``max_df`` drops anchors appearing in more than that many docs
+    ``idx`` is an (id, anchor) index: the exploded ``anchors`` column of the
+    caller's materialized signature frame (``anchor_index`` derives it from
+    text).  ``max_df`` drops anchors appearing in more than that many docs
     (boilerplate runs) before the self-join — the scale path; the oracle
     query runs uncapped.
     """
-    return substring_pairs_from_index(
-        anchor_index(df, id_col, text_col, cfg).localCheckpoint(eager=False),
-        min_anchors, max_df)
-
-
-def substring_pairs_from_index(idx: DataFrame, min_anchors: int = 2,
-                               max_df: int | None = None) -> DataFrame:
-    """Pair join over a (materialized) anchor index — pipeline stage form."""
     if max_df is not None:
         from pyspark.sql import Window
         n_part = int(idx.sparkSession.conf.get(

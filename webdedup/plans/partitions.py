@@ -10,14 +10,7 @@ The partition probe must reflect ACTUAL partitions: ``inputFiles()`` lies
 files can arrive as ONE scan partition — a file-count probe silently
 serialized downstream UDF stages; see PLANS.md §10).  The only exact probe is
 ``df.rdd.getNumPartitions()``, which converts the plan to an RDD on the
-driver per call.  To avoid that conversion on hot paths, a deployment that
-knows its input layout can set the static hint
-
-    spark.conf.set("spark.webdedup.inputPartitions", "<n>")
-
-and the probe is skipped entirely (the hint states a LOWER BOUND on the
-partition count of any scanned frame; set it >= shuffle.partitions to make
-every guard a no-op).
+driver per call.
 """
 
 from __future__ import annotations
@@ -31,12 +24,9 @@ def ensure_min_partitions(df: DataFrame, n: int | None = None,
     than ``below`` (default ``n``).
 
     ``n`` defaults to ``spark.sql.shuffle.partitions``.  The current count
-    comes from the ``spark.webdedup.inputPartitions`` static hint when set,
-    else from an exact ``.rdd`` probe (see module docstring).
+    comes from an exact ``.rdd`` probe (see module docstring).
     """
-    spark = df.sparkSession
     if n is None:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    hint = spark.conf.get("spark.webdedup.inputPartitions", None)
-    cur = int(hint) if hint else df.rdd.getNumPartitions()
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    cur = df.rdd.getNumPartitions()
     return df.repartition(n) if cur < (n if below is None else below) else df

@@ -21,7 +21,6 @@ from webdedup.operators import exact, minhash_lsh, simhash_lsh, substring
 from webdedup.operators.components import connected_components
 from webdedup.operators.represent import cluster_sizes, representatives
 from webdedup.plans import checkpoint, metrics
-from webdedup.plans.partitions import ensure_min_partitions
 
 
 @dataclass
@@ -112,13 +111,11 @@ def run(
         if not (resume and was_done):
             checkpoint.write(build(), work_dir, name, partitions=par)
         # either way downstream stages read a stable, shuffle-free scan of
-        # the stage table instead of recomputing lineage
+        # the stage table instead of recomputing lineage.  A table of at
+        # least `par` rows is written as `par` files and reads back as `par`
+        # partitions (pytest-pinned), so however far AQE coalesced the
+        # shuffle that built it, the stages downstream start spread out
         df = checkpoint.read(spark, work_dir, name)
-        # AQE coalesces small shuffles to few partitions, which would starve
-        # downstream UDF stages of parallelism; re-expand cheap small tables.
-        # (At production scale stage tables have >> `par` partitions anyway;
-        # see plans.partitions for the probe-vs-hint tradeoff.)
-        df = ensure_min_partitions(df, par)
         n = checkpoint.row_count(work_dir, name)  # footer metadata, no job
         dt = time.time() - t0
         times[name], rows[name] = dt, n
@@ -164,24 +161,15 @@ def run(
         ))
     if "simhash" in matchers:
         def _sim():
-            e = simhash_lsh.simhash_edges(
-                None, cfg=cfg, sigs=sigs.select("id", "simhash"))
+            e = simhash_lsh.simhash_edges(sigs.select("id", "simhash"), cfg)
             if simhash_confirm_jaccard is not None:
                 # empty-token docs carry the sentinel signature and would
                 # est-score 1.0 against each other (r6 ADVICE: e.g. "" vs
                 # "  " — NOT exact dups, both tokenize to nothing; their
-                # exact Jaccard is 0/0 -> 0).  Anti-join the (tiny)
-                # sentinel-id frame before scoring.
-                from webdedup.functions.hashing import MERSENNE61
-                sent = (sigs.filter(F.element_at("minhash", 1)
-                                    == F.lit(MERSENNE61)).select("id"))
-                ee = (e.select("a", "b")
-                      .join(sent.select(F.col("id").alias("a")),
-                            "a", "left_anti")
-                      .join(sent.select(F.col("id").alias("b")),
-                            "b", "left_anti"))
+                # exact Jaccard is 0/0 -> 0): drop their pairs before scoring
+                mh = sigs.select("id", "minhash")
                 e = minhash_lsh.signature_jaccard(
-                    ee, sigs.select("id", "minhash")
+                    minhash_lsh.without_empty_docs(e.select("a", "b"), mh), mh
                 ).filter(F.col("est_jaccard") >= simhash_confirm_jaccard)
             return e.select(F.col("a").alias("u"), F.col("b").alias("v"))
         edge_frames.append(stage("edges_simhash", _sim))
@@ -203,10 +191,9 @@ def run(
                         if minhash_fast_accept == "auto"
                         else minhash_fast_accept)
             e = minhash_lsh.minhash_edges(
-                docs, cfg=cfg, threshold=cfg.jaccard_threshold,
+                sigs.select("id", "minhash"), sigs.select("id", "shingles"),
+                cfg, threshold=cfg.jaccard_threshold,
                 est_prefilter=est_cut, fast_accept=fast_cut,
-                sigs=sigs.select("id", "minhash"),
-                sets=sigs.select("id", "shingles"),
                 # bit-identical (pytest-pinned); exact-dup cliques skip
                 # banding/verify and expand from one representative
                 collapse_identical=True)
@@ -215,7 +202,7 @@ def run(
     if "substring" in matchers:
         edge_frames.append(stage(
             "edges_substring",
-            lambda: substring.substring_pairs_from_index(
+            lambda: substring.substring_pairs(
                 sigs.select("id", F.explode("anchors").alias("anchor")),
                 min_anchors=2, max_df=cfg.max_bucket_size,
             ).select(F.col("a").alias("u"), F.col("b").alias("v")),
